@@ -11,23 +11,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** Register raw tables and lakehouse views as temp views. */
-  def registerViews(spark: SparkSession, dir: String): Unit = {
-    functions.GraftFunctions.register(spark)
-    Tables.all.foreach(n => Tables.df(spark, dir, n).createOrReplaceTempView(n))
-    val lk = new Lakehouse(spark, dir)
-    lk.logEntries.createOrReplaceTempView("log_entries")
-    lk.measures.createOrReplaceTempView("measures")
-    lk.logStats.createOrReplaceTempView("log_stats")
-    lk.threadSpans.createOrReplaceTempView("thread_spans")
-    lk.otelSpans.createOrReplaceTempView("otel_spans")
-    lk.asyncEvents.createOrReplaceTempView("async_events")
-    lk.processes.createOrReplaceTempView("processes")
-    lk.streams.createOrReplaceTempView("streams")
-    lk.blocks.createOrReplaceTempView("blocks")
-    // `images` is deliberately NOT registered globally: the reference's
-    // ImagesView is instance-only (images_view.rs) — use
-    // Lakehouse.viewInstance("images", processId).
+  /** Register the raw tables and the lakehouse views as temp views.
+    * Each lake table is read ONCE per registration: the nine global
+    * views derive from the same `events` relation registered as
+    * `events` (a registration is a snapshot of each table's listing).
+    */
+  def registerViews(spark: SparkSession, dir: String): Unit =
+    Tables.all.foreach(registerTable(spark, dir, _))
+
+  /** Register one lake table (one read) and the views derived from it. */
+  private def registerTable(spark: SparkSession, dir: String, name: String): Unit = {
+    val views =
+      if (name != "events") Seq(name -> Tables.df(spark, dir, name))
+      else {
+        val lk = new Lakehouse(spark, dir)
+        ("events" -> lk.events) +: lk.globalViews
+      }
+    views.foreach { case (n, df) => df.createOrReplaceTempView(n) }
   }
 
   // session → dir whose views are currently registered. Weak keys so a
@@ -41,9 +41,10 @@ object Graft {
   // thread-locals so a sibling's range can't poison it.
   private val viewsReady = new java.util.WeakHashMap[SparkSession, String]()
 
-  /** Force re-registration on next query() — call after external
-    * writers add files beneath `dir` (the memoized temp views hold the
-    * file listing from registration time).
+  /** Force a whole-lake re-registration on the next query(). Reserved
+    * for EXTERNAL writers adding files beneath `dir` (the temp views
+    * hold the file listing from registration time); [[bulkIngest]]
+    * re-registers just the table it wrote.
     */
   def refreshViews(spark: SparkSession): Unit =
     viewsReady.synchronized { viewsReady.remove(spark) }
@@ -283,9 +284,13 @@ object Graft {
     * table's schema server-side and appends; here the schema gate is
     * exact StructType equality against the existing table (names,
     * types, order — a silently-coerced append would corrupt every
-    * downstream oracle), the write is a parquet append, and the
-    * session's registered views are refreshed so the new rows are
-    * queryable immediately. Returns rows ingested.
+    * downstream oracle), and the write is a parquet append. If this
+    * session is registered for `dir`, only `tableName` and the views
+    * derived from it are re-registered (one read of that table), so the
+    * new rows are queryable immediately while every other table keeps
+    * its registration; a write to another dir or to a table outside
+    * [[Tables.all]] leaves the registration as it is. Returns rows
+    * ingested.
     */
   def bulkIngest(spark: SparkSession, dir: String, tableName: String,
       rows: org.apache.spark.sql.DataFrame): Long = {
@@ -308,7 +313,11 @@ object Graft {
     }
     val n = rows.count()
     rows.write.mode("append").parquet(path)
-    refreshViews(spark)
+    // same per-session lock as ensureViews: no query registers meanwhile
+    spark.synchronized {
+      if (registeredDir(spark).contains(dir) && Tables.all.contains(tableName))
+        registerTable(spark, dir, tableName)
+    }
     n
   }
 

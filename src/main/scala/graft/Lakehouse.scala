@@ -19,18 +19,32 @@ import graft.queries.epochMs
   * role of process_id, `event_type` of target/name, `props` of
   * properties.
   */
-final class Lakehouse(spark: SparkSession, dir: String) {
+final class Lakehouse(spark: SparkSession, dir: String,
+    loadedEvents: Option[DataFrame] = None) {
 
-  def table(name: String): DataFrame = Tables.df(spark, dir, name)
+  /** The `events` relation every view here derives from: `loadedEvents`
+    * (e.g. a session's registered `events` view) or else ONE read of the
+    * table. Read at most once per instance, so a Lakehouse is a snapshot
+    * of the table's file listing — build a new one to see later appends.
+    */
+  lazy val events: DataFrame = loadedEvents.getOrElse(Tables.df(spark, dir, "events"))
+
+  /** The global views registered beside the raw tables, by name.
+    * `images` is deliberately absent: the reference's ImagesView is
+    * instance-only (images_view.rs) — use viewInstance("images", id).
+    */
+  def globalViews: Seq[(String, DataFrame)] = Seq(
+    "log_entries" -> logEntries, "measures" -> measures, "log_stats" -> logStats,
+    "thread_spans" -> threadSpans, "otel_spans" -> otelSpans,
+    "async_events" -> asyncEvents, "processes" -> processes,
+    "streams" -> streams, "blocks" -> blocks)
 
   /** Severity mapping for the log view: errors are level 2, business
     * events informational (4), views debug-ish (5). Reference level
     * semantics: 1=Fatal .. 6=Trace, lower = more severe.
     */
-  def logEntries: DataFrame = logEntriesFrom(table("events"))
-
-  private def logEntriesFrom(e: DataFrame): DataFrame =
-    e.select(
+  def logEntries: DataFrame =
+    events.select(
       epochMs(col("ts")).as("time_ms"),
       col("event_id"),
       col("user_id").cast("string").as("process_id"),
@@ -42,10 +56,8 @@ final class Lakehouse(spark: SparkSession, dir: String) {
       col("props").as("properties"))
 
   /** Numeric measures view: every event carries a value sample. */
-  def measures: DataFrame = measuresFrom(table("events"))
-
-  private def measuresFrom(e: DataFrame): DataFrame =
-    e.select(
+  def measures: DataFrame =
+    events.select(
       epochMs(col("ts")).as("time_ms"),
       col("event_id"),
       col("user_id").cast("string").as("process_id"),
@@ -57,10 +69,8 @@ final class Lakehouse(spark: SparkSession, dir: String) {
   /** Per-minute per-level counts — the log_stats incremental view shape
     * (reference: rust/analytics/src/lakehouse/log_stats_view.rs:34-42).
     */
-  def logStats: DataFrame = logStatsFrom(table("events"))
-
-  private def logStatsFrom(e: DataFrame): DataFrame =
-    logEntriesFrom(e)
+  def logStats: DataFrame =
+    logEntries
       .groupBy((col("time_ms") - pmod(col("time_ms"), lit(60000L))).as("time_bin_ms"),
         col("process_id"), col("level"), col("target"))
       .agg(count(lit(1)).as("count"))
@@ -69,11 +79,9 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * rust/analytics/src/lakehouse/thread_spans_view.rs + the
     * process_spans table function in lakehouse/query.rs:138).
     */
-  def threadSpans: DataFrame = threadSpansFrom(table("events"))
-
-  private def threadSpansFrom(e: DataFrame): DataFrame =
+  def threadSpans: DataFrame =
     graft.operators.SpanAssembly
-      .consecutiveSpans(e, "user_id", epochMs(col("ts")), "event_id", "event_type")
+      .consecutiveSpans(events, "user_id", epochMs(col("ts")), "event_id", "event_type")
       .select(col("user_id").cast("string").as("process_id"),
         col("event_id"), col("name"), col("begin_ms"), col("end_ms"), col("duration_ms"))
 
@@ -81,7 +89,7 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * per telemetry source with lifetime + activity stats.
     */
   def processes: DataFrame =
-    table("events")
+    events
       .groupBy(col("user_id").cast("string").as("process_id"))
       .agg(min(epochMs(col("ts"))).as("start_time_ms"),
         max(epochMs(col("ts"))).as("last_update_time_ms"),
@@ -92,7 +100,7 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * stream kind) block stats — event_type plays the stream tag.
     */
   def streams: DataFrame =
-    table("events")
+    events
       .groupBy(col("user_id").cast("string").as("process_id"), col("event_type").as("tag"))
       .agg(count(lit(1)).as("nb_objects"),
         min(epochMs(col("ts"))).as("min_event_time_ms"),
@@ -103,7 +111,7 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     */
   def blocks: DataFrame = {
     val ms = epochMs(col("ts"))
-    table("events")
+    events
       .groupBy(col("user_id").cast("string").as("process_id"),
         col("event_type").as("stream_tag"),
         (ms - pmod(ms, lit(60000L))).as("block_start_ms"))
@@ -124,12 +132,12 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * intrinsically bounded) and sorted inside the row, never on the
     * driver. Shared by the oracle-checked m_block_payload query and
     * the get_payload SQL table function, so the synthesis can never
-    * fork.
+    * fork. This is every block's payload (the bulk/relational form).
     */
-  private def blockPayloadsFrom(e: DataFrame): DataFrame = {
+  def blockPayloads: DataFrame = {
     val ms = epochMs(col("ts"))
     val cents = floor(col("value") * lit(100.0)).cast("long")
-    val keyed = e.select(col("event_id"),
+    val keyed = events.select(col("event_id"),
       col("user_id").cast("string").as("process_id"),
       col("event_type").as("stream_tag"),
       (ms - pmod(ms, lit(60000L))).as("block_start_ms"),
@@ -144,9 +152,6 @@ final class Lakehouse(spark: SparkSession, dir: String) {
         payload.cast("binary").as("payload"))
   }
 
-  /** Every block's synthesized payload (the bulk/relational form). */
-  def blockPayloads: DataFrame = blockPayloadsFrom(table("events"))
-
   /** One block's payload — the get_payload(process_id, stream_id,
     * block_id) fetch. The process/stream equalities are plain scan
     * predicates (on a process/date-partitioned lake they prune to
@@ -154,10 +159,9 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * block-start filter runs on the derived minute bucket.
     */
   def getPayload(processId: String, streamTag: String, blockStartMs: Long): DataFrame =
-    blockPayloadsFrom(table("events")
-      .where(col("user_id").cast("string") === processId &&
-        col("event_type") === streamTag))
-      .where(col("block_start_ms") === blockStartMs)
+    new Lakehouse(spark, dir, Some(events.where(
+      col("user_id").cast("string") === processId && col("event_type") === streamTag)))
+      .blockPayloads.where(col("block_start_ms") === blockStartMs)
 
   /** Screenshot/image blocks view (reference:
     * rust/analytics/src/lakehouse/images_view.rs,
@@ -169,14 +173,12 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * plumbing, not query semantics — same stance as m_block_payload).
     * Per-row expressions only; no shuffle.
     */
-  def images: DataFrame = imagesFrom(table("events"))
-
-  private def imagesFrom(e: DataFrame): DataFrame = {
+  def images: DataFrame = {
     val ms = epochMs(col("ts"))
     val blockStart = ms - pmod(ms, lit(60000L))
     val pid = col("user_id").cast("string")
     val payload = concat(lit("IMG:"), col("event_id").cast("string"), lit(":"), col("props"))
-    e.where(col("event_type") === "view").select(
+    events.where(col("event_type") === "view").select(
       pid.as("process_id"),
       concat(pid, lit("-img")).as("stream_id"),
       concat(pid, lit("-img-"), blockStart.cast("string")).as("block_id"),
@@ -206,11 +208,9 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * stack decode the reference's block processor runs at ingestion,
     * then each span is unpivoted back to its two raw events.
     */
-  def asyncEvents: DataFrame = asyncEventsFrom(table("events"))
-
-  private def asyncEventsFrom(e: DataFrame): DataFrame = {
+  def asyncEvents: DataFrame = {
     val base = graft.operators.SpanAssembly.beginEndSpans(
-      e, "user_id", epochMs(col("ts")), "event_id", "event_type",
+      events, "user_id", epochMs(col("ts")), "event_id", "event_type",
       col("event_type").isin("signup", "view"))
     val sp = graft.operators.SpanAssembly.withParents(base, "user_id")
     sp.select(col("user_id"), col("span_id"), col("parent_id"), col("name"), col("depth"),
@@ -238,28 +238,27 @@ final class Lakehouse(spark: SparkSession, dir: String) {
     * thread_spans; status is derived from error events that fall inside
     * the span's interval (keyed containment join — the equi-key is the
     * process, so no all-pairs work).
+    *
+    * In production this view is MATERIALIZED (the reference's otel views
+    * are batch views built from ingested blocks, never recomputed per
+    * query) — SqlBatchView is the mechanism; this lazy definition is the
+    * transform. The status branch reads the PRE-parents assembly so the
+    * costlier parent-linkage self-join isn't replayed for it.
     */
-  def otelSpans: DataFrame = otelSpansFrom(table("events"))
-
-  // In production this view is MATERIALIZED (the reference's otel views
-  // are batch views built from ingested blocks, never recomputed per
-  // query) — SqlBatchView is the mechanism; this lazy definition is the
-  // transform. The status branch reads the PRE-parents assembly so the
-  // costlier parent-linkage self-join isn't replayed for it.
-  private def otelSpansFrom(e: DataFrame): DataFrame = {
+  def otelSpans: DataFrame = {
     val base = graft.operators.SpanAssembly.beginEndSpans(
-      e, "user_id", epochMs(col("ts")), "event_id", "event_type",
+      events, "user_id", epochMs(col("ts")), "event_id", "event_type",
       col("event_type").isin("signup", "view"))
     val sp = graft.operators.SpanAssembly.withParents(base, "user_id")
     // error events inside the span window decide status (OTLP status
     // code vocabulary: spans_block_processor.rs proto_status_code_str)
-    val errs = e.where(col("event_type") === "error")
+    val errs = events.where(col("event_type") === "error")
       .select(col("user_id").as("e_uid"), epochMs(col("ts")).as("e_ms"))
     val errCount = base.select(col("user_id"), col("span_id"), col("begin_ms"), col("end_ms"))
       .join(errs, col("user_id") === col("e_uid") &&
         col("e_ms") >= col("begin_ms") && col("e_ms") <= col("end_ms"), "left_outer")
       .groupBy("span_id").agg(count(col("e_ms")).as("n_errors"))
-    val attrs = e.select(col("event_id").as("a_id"), col("props").as("attributes"))
+    val attrs = events.select(col("event_id").as("a_id"), col("props").as("attributes"))
     val spanHex = (id: Column) => substring(md5(concat(lit("span:"), id.cast("string"))), 1, 16)
     sp.join(errCount, Seq("span_id"), "left_outer")
       .join(attrs, col("span_id") === col("a_id"), "left_outer")
@@ -295,18 +294,18 @@ final class Lakehouse(spark: SparkSession, dir: String) {
   def viewInstance(view: String, instanceId: String): DataFrame = {
     val canonical = scala.util.Try(instanceId.toLong).toOption
       .filter(_.toString == instanceId)
-    val scoped = canonical match {
-      case Some(id) => table("events").where(col("user_id").cast("long") === id)
-      case None     => table("events").where(lit(false)) // non-canonical: empty
-    }
+    val scoped = new Lakehouse(spark, dir, Some(canonical match {
+      case Some(id) => events.where(col("user_id").cast("long") === id)
+      case None     => events.where(lit(false)) // non-canonical: empty
+    }))
     view match {
-      case "log_entries"  => logEntriesFrom(scoped)
-      case "measures"     => measuresFrom(scoped)
-      case "log_stats"    => logStatsFrom(scoped)
-      case "thread_spans" => threadSpansFrom(scoped)
-      case "images"       => imagesFrom(scoped)
-      case "otel_spans"   => otelSpansFrom(scoped)
-      case "async_events" => asyncEventsFrom(scoped)
+      case "log_entries"  => scoped.logEntries
+      case "measures"     => scoped.measures
+      case "log_stats"    => scoped.logStats
+      case "thread_spans" => scoped.threadSpans
+      case "images"       => scoped.images
+      case "otel_spans"   => scoped.otelSpans
+      case "async_events" => scoped.asyncEvents
       case other => throw new IllegalArgumentException(s"unknown view set: $other")
     }
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 
 /** Isolated per-query timing — the adjudication tool for bench
   * regressions (the full Bench interleaves 30 queries, so one noisy

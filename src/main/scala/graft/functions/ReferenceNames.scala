@@ -228,9 +228,7 @@ object ReferenceNames {
     require(args.length == 2, "view_instance(view_name, instance_id)")
     val view = litString(args(0), "view_instance")
     val id = litString(args(1), "view_instance")
-    val dir = graft.Graft.registeredDir(spark).getOrElse(throw new IllegalStateException(
-      "view_instance: no lake registered on this session — call Graft.query/registerViews first"))
-    new graft.Lakehouse(spark, dir).viewInstance(view, id).queryExecution.logical
+    registeredLake(spark, "view_instance").viewInstance(view, id).queryExecution.logical
   }
 
   /** `get_payload(process_id, stream_id, block_id)` — the reference's
@@ -254,9 +252,7 @@ object ReferenceNames {
     val block = litString(args(2), "get_payload")
     require(block.forall(c => c.isDigit || c == '-'),
       s"get_payload: block_id is the block's start epoch-ms here, got: '$block'")
-    val dir = graft.Graft.registeredDir(spark).getOrElse(throw new IllegalStateException(
-      "get_payload: no lake registered on this session — call Graft.query/registerViews first"))
-    new graft.Lakehouse(spark, dir).getPayload(pid, stream, block.toLong)
+    registeredLake(spark, "get_payload").getPayload(pid, stream, block.toLong)
       .queryExecution.logical
   }
 
@@ -361,6 +357,13 @@ object ReferenceNames {
     graft.Graft.registeredDir(spark).getOrElse(throw new IllegalStateException(
       s"$fn: no lake registered on this session — call Graft.query/registerViews first"))
 
+  /** The session's registered lake over the `events` view its
+    * registration already read — no second listing or schema read.
+    * Built per call: a DataFrame pins its session, so none is cached.
+    */
+  private def registeredLake(spark: SparkSession, fn: String): graft.Lakehouse =
+    new graft.Lakehouse(spark, registeredLakeDir(spark, fn), Some(spark.table("events")))
+
   /** Session conf naming the materialized-partition lake root. The
     * reference's partition store is ambient (its Postgres metadata DB);
     * here partition lakes are directories, so the ambient root is a
@@ -411,7 +414,7 @@ object ReferenceNames {
     */
   def listViewSetsBuilder(spark: SparkSession)(args: Seq[Expression]): LogicalPlan = {
     require(args.isEmpty, "list_view_sets()")
-    val lk = new graft.Lakehouse(spark, registeredLakeDir(spark, "list_view_sets"))
+    val lk = registeredLake(spark, "list_view_sets")
     val rows = lk.viewSets.map { name =>
       val schema = lk.viewInstance(name, "0").schema
       (name, graft.operators.Materialize.schemaHash(schema), schema.toDDL,
@@ -476,7 +479,7 @@ object ReferenceNames {
     require(parts.length == 3 && parts(2).matches("-?\\d+") &&
       scala.util.Try(parts(2).toLong).isSuccess,
       s"parse_block: block_id is 'process_id/stream_tag/block_start_ms' here, got: '$id'")
-    val lk = new graft.Lakehouse(spark, registeredLakeDir(spark, "parse_block"))
+    val lk = registeredLake(spark, "parse_block")
     lk.getPayload(parts(0), parts(1), parts(2).toLong)
       .select(posexplode(split(col("payload").cast("string"), "\n")))
       .select(col("pos").cast("long").as("object_index"),
@@ -550,7 +553,7 @@ object ReferenceNames {
     require(viewSet == "log_stats",
       s"materialize_partitions: '$viewSet' is not materializable here — 'log_stats' is")
     val root = litString(args(1), "materialize_partitions")
-    val lk = new graft.Lakehouse(spark, registeredLakeDir(spark, "materialize_partitions"))
+    val lk = registeredLake(spark, "materialize_partitions")
     val stats = graft.operators.Materialize.updateByDay(spark, lk.logStats, root)
     spark.createDataFrame(Seq((viewSet, stats.daysRecomputed, stats.rowsWritten)))
       .toDF("view_set_name", "days_recomputed", "rows_written").queryExecution.logical
@@ -568,7 +571,7 @@ object ReferenceNames {
       s"regenerate_partitions: '$viewSet' is not materializable here — 'log_stats' is")
     val root = litString(args(1), "regenerate_partitions")
     val date = litString(args(2), "regenerate_partitions")
-    val lk = new graft.Lakehouse(spark, registeredLakeDir(spark, "regenerate_partitions"))
+    val lk = registeredLake(spark, "regenerate_partitions")
     val rows = graft.operators.Materialize.regenerateDay(spark, lk.logStats, root, date)
     spark.createDataFrame(Seq((viewSet, date, rows)))
       .toDF("view_set_name", "date", "rows_written").queryExecution.logical
@@ -598,7 +601,7 @@ object ReferenceNames {
   def retireByMetadataBuilder(spark: SparkSession)(args: Seq[Expression]): LogicalPlan = {
     require(args.length <= 1, "retire_partition_by_metadata([root])")
     val root = partitionRoot(spark, args.headOption, "retire_partition_by_metadata")
-    val lk = new graft.Lakehouse(spark, registeredLakeDir(spark, "retire_partition_by_metadata"))
+    val lk = registeredLake(spark, "retire_partition_by_metadata")
     graft.operators.Materialize
       .retireIncompatiblePartitions(spark, root, lk.logStats.schema)
       .queryExecution.logical

@@ -22,7 +22,6 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object ShingleKernels {
 
-  private val WS_MAX = 0x20
   @inline private def isWs(b: Byte): Boolean =
     // Java regex \s = [ \t\n\x0B\f\r] — all ASCII, so a byte-level
     // scan is exact on UTF-8 (multi-byte code points are >= 0x80,
@@ -186,7 +185,7 @@ object ShingleKernels {
     }
     starts.add(pos); ends.add(hi) // final token (empty if trailing run)
     val m = starts.size()
-    val nChunks = (m + n - 1) / n // m >= 1, so >= 1
+    val nChunks = 1 + (m - 1) / n // ceil(m / n) for m >= 1, no Int overflow at huge n
     val arr = new Array[Any](nChunks)
     var c = 0
     while (c < nChunks) {

@@ -4,7 +4,6 @@ import graft.{GraftQuery, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType}
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 
 /** Fourth SQL tranche: CUBE aggregation, nation-pair multi-join
   * (TPC-H Q7 shape), and the jsonb generator functions (jsonb_each /

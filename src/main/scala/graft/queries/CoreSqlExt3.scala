@@ -21,7 +21,6 @@ object CoreSqlExt3 {
       // Q2 shape: per-part minimum supplier balance, then the suppliers
       // achieving it (correlated-aggregate subquery → window rewrite)
       val su = t(s, dir, "supplier")
-      val p = t(s, dir, "part").where(col("p_size") < 10)
       // every (part, supplier) pairing via partkey/suppkey arithmetic
       // isn't in the data model; use nationkey as the grouping link:
       // cheapest supplier per nation, then parts sized <10 counted per
@@ -399,7 +398,6 @@ object CoreSqlExt3 {
       // must still push the common join key and prune columns
       val l = t(s, dir, "lineitem")
       val p = t(s, dir, "part")
-      val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
       val cond =
         (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) && col("l_quantity").between(1, 11)) ||
         (col("p_brand") === "Brand#2" && col("p_size").between(1, 25) && col("l_quantity").between(10, 20)) ||

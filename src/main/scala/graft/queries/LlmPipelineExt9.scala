@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{GraftQuery, Tables}
 import graft.operators.{Cms, Dedup, TextAnalysis}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)

@@ -4,7 +4,6 @@ import graft.{GraftQuery, Lakehouse, Tables}
 import graft.functions.Colors
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 
 /** Second tranche of the observability surface: JSON path/array
   * functions (M13), view-set/partition metadata (M15), color scales

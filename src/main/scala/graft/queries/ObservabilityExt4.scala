@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Lakehouse, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Fifth observability tranche — the last of the reference's lakehouse

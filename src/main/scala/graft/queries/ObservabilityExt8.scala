@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, Lakehouse}
-import org.apache.spark.sql.functions._
 
 /** Eighth observability tranche: the raw (unpaired) async-events
   * surface — reference async_events_view.rs:35 exposes begin/end async

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{col => _, round => sparkRound, _}
+import org.apache.spark.sql.functions.{col => _, round => _, _}
 
 package object queries {
   /** Epoch milliseconds of a (possibly ntz) timestamp column. Session

@@ -11,7 +11,7 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
   * ("a a a a"), the self-pair (w1 == w2) and pairs at array edges —
   * the parity cases where a wrong scan would diverge.
   */
-class BpeMergeKernelSpec extends SparkSpec {
+class BpeMergeKernelSpec extends SparkSpec with TmpDirSupport {
 
   /** The relational form's answer for one doc, via Spark. */
   private def relational(docs: Seq[(Long, Seq[String])], w1: String, w2: String)
@@ -76,5 +76,25 @@ class BpeMergeKernelSpec extends SparkSpec {
     }
     val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
     assert(result.passed, s"scalacheck: ${result.status}")
+  }
+
+  test("l_bpe_merge drops a null-text doc, as the oracle's unnest(NULL) does") {
+    import spark.implicits._
+    val dir = tmpDir("bpe_null")
+    Seq[(Long, Option[String], String, String, Long)](
+      (1L, Some("a b a b c"), "en", "s", 9L),
+      (2L, None, "en", "s", 0L),
+      (3L, Some("a b"), "en", "s", 3L))
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("l_bpe_merge")(spark, dir).collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_before"),
+        r.getAs[Long]("n_after"), r.getAs[String]("w1"), r.getAs[String]("w2"),
+        r.getAs[Long]("pair_n"), r.getAs[String]("merged_md5")))
+    // the oracle SQL's rows on this table (DuckDB): the winning pair
+    // (a, b) occurs 3 times; doc 1 merges twice, doc 3 once
+    assert(got.toSeq == Seq(
+      (1L, 5L, 3L, "a", "b", 3L, "5e3ccabf6f6c096df9e9bc5ca7242862"),
+      (3L, 2L, 1L, "a", "b", 3L, "dbf08e00b01fd58a4a5967753b43784f")), got.mkString("; "))
   }
 }

@@ -44,6 +44,54 @@ class BulkIngestSpec extends SparkSpec with TmpDirSupport {
     assert(after === 80L)
   }
 
+  /** The plan a temp view is registered with (getTempView wraps the
+    * stored plan in a fresh View node per call; the child is stored). */
+  private def tempView(name: String) =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog.getTempView(name).get.child
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("targeted refresh: events views serve the new rows, other tables stay registered") {
+    val dir = seededLake()
+    Graft.bulkIngest(spark, dir, "events", eventRows(1 to 40, "signup"))
+    def instanceRows() = Graft.query(spark, dir,
+      "SELECT count(*) FROM view_instance('log_entries', '1')").head().getLong(0)
+    assert(instanceRows() === 8L) // registers the session for dir
+    val lineitem = tempView("lineitem")
+    val events = tempView("events")
+    val before = new Lakehouse(spark, dir).globalViews.map { case (n, df) => n -> sortedRows(df) }
+
+    val batch = Seq("view", "error", "purchase", "signup").zipWithIndex
+      .map { case (t, k) => eventRows(41 + 10 * k to 50 + 10 * k, t) }.reduce(_ union _)
+    assert(Graft.bulkIngest(spark, dir, "events", batch) === 40L)
+
+    assert(Graft.registeredDir(spark) === Some(dir))
+    assert(tempView("lineitem") eq lineitem, "a table that was not written was re-registered")
+    assert(!(tempView("events") eq events), "the written table was not re-registered")
+    // every events-derived view serves exactly what a fresh read gives,
+    // and each one changed
+    new Lakehouse(spark, dir).globalViews.zip(before).foreach { case ((n, fresh), (_, old)) =>
+      val served = sortedRows(Graft.query(spark, dir, s"SELECT * FROM $n"))
+      assert(served === sortedRows(fresh), s"$n is stale after bulkIngest")
+      assert(served !== old, s"$n did not change after bulkIngest")
+    }
+    assert(instanceRows() === 16L)
+  }
+
+  test("ingest into another dir leaves the session's registration and results unchanged") {
+    val dir = seededLake()
+    Graft.bulkIngest(spark, dir, "events", eventRows(1 to 30, "error"))
+    def n() = Graft.query(spark, dir, "SELECT count(*) FROM log_entries").head().getLong(0)
+    assert(n() === 30L)
+    val events = tempView("events")
+    Graft.bulkIngest(spark, tmpDir("bulk_ingest_other"), "events", eventRows(31 to 40, "view"))
+    assert(Graft.registeredDir(spark) === Some(dir))
+    assert(tempView("events") eq events)
+    assert(n() === 30L)
+  }
+
   test("schema gate: a drifted batch is rejected, table untouched") {
     val dir = tmpDir("bulk_ingest_schema")
     Graft.bulkIngest(spark, dir, "events", eventRows(1 to 10, "error"))

@@ -44,6 +44,11 @@ class ChunkKernelSpec extends SparkSpec {
     check(edgeInputs)
   }
 
+  test("chunk kernel: n = Int.MaxValue yields one chunk, no Int overflow") {
+    // (m + n - 1) / n overflowed to a negative chunk count for m >= 2
+    check(edgeInputs, Seq(Int.MaxValue))
+  }
+
   test("property: chunk kernel equals composed form on random strings") {
     val weird = Gen.oneOf(' ', '\u3000', '\u000B', '\f', '\r', '\n',
       '\t', '\u00A0', 'a', 'b', 'Z', '0', '9', '!', '.', '-',

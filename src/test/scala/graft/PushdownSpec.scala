@@ -11,8 +11,9 @@ class PushdownSpec extends SparkSpec
 
   // full (untruncated) pushed-filter lists from every parquet scan —
   // plan toString elides long filter lists
-  private def executedPlan(name: String): String = {
-    val df = qs(name).fn(spark, sfDir)
+  private def executedPlan(name: String): String = pushedFilters(qs(name).fn(spark, sfDir))
+
+  private def pushedFilters(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
     collectWithSubqueries(df.queryExecution.executedPlan) {
       case s: org.apache.spark.sql.execution.FileSourceScanExec =>
@@ -31,6 +32,14 @@ class PushdownSpec extends SparkSpec
   test("m_view_instance scopes the RAW user_id column in the scan") {
     val plan = executedPlan("m_view_instance")
     assert(plan.contains("EqualTo(user_id"), s"process scope not pushed:\n$plan")
+  }
+
+  test("view_instance() over the registered events view scopes the RAW user_id in the scan") {
+    Seq("log_entries", "thread_spans").foreach { v =>
+      val plan = pushedFilters(
+        Graft.query(spark, sfDir, s"SELECT * FROM view_instance('$v', '7')"))
+      assert(plan.contains("EqualTo(user_id"), s"$v: process scope not pushed:\n$plan")
+    }
   }
 
   test("q19_disjunctive pushes the decomposed OR to both scans") {

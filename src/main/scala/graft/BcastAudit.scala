@@ -13,6 +13,9 @@ import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExc
   * Usage: runMain graft.BcastAudit <sfDir> <query>...
   * Env: GRAFT_AUDIT_CPUS (default 8), GRAFT_AUDIT_BCAST_MB threshold
   * for printing (default 0 = print all).
+  * It builds its own session, not [[GraftSession.base]], because it
+  * mirrors the test session's audit conditions (1 MB pages, default
+  * broadcast threshold) that BroadcastBudgetSpec asserts under.
   */
 object BcastAudit {
   def main(args: Array[String]): Unit = {

@@ -1,33 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit helper: print the formatted physical plan (post-AQE
   * re-optimization happens at runtime; this shows the static pick) for
-  * the named queries. Usage: runMain graft.Explain <sfDir> <name>...
+  * the named queries, on the [[GraftSession.base]] session.
+  * Usage: runMain graft.Explain <sfDir> <name>...
+  * Env: SPARK_GRAFT_CPUS (default 8).
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Scan size estimates are FILE bytes x column fraction, but
-      // snappy parquet expands 24-31x in memory (sf10 audit: the
-      // customer/part dims hid a decade of growth under the broadcast
-      // threshold and statically built 192 MB hash relations). 16x
-      // keeps the estimate within ~2x of built size, so scan-backed
-      // broadcast picks demote on schedule while AQE still re-converts
-      // genuinely small sides from ACTUAL compressed bytes.
-      .config("spark.sql.sources.fileCompressionFactor", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    // Shared session config: GraftSession.base — the plan printed is
+    // the plan the bench runs.
+    val spark = GraftSession.base(sfDir, sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // conf-driven spill budget (spark.graft.query.maxSpillMb) live in every
     // session-building driver, not just the gate (ADVICE r12)

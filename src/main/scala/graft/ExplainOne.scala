@@ -1,22 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Print one registered query's AQE-finalized physical plan — the
   * plan-shape iteration tool (MicroBench times it, StageProfile
-  * attributes it, this one shows it).
+  * attributes it, this one shows it), on the [[GraftSession.base]]
+  * session.
   * Usage: runMain graft.ExplainOne <sfDir> <query>
+  * Env: SPARK_GRAFT_CPUS (default 4).
   */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
+    // Shared session config: GraftSession.base (same plan as Bench).
+    val spark = GraftSession.base(args(0), sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val q = SparkEntry.allQueries.find(_.name == args(1))
       .getOrElse(sys.error(s"unknown query: ${args(1)}"))

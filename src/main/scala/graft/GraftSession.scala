@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The ONE bench/diagnostic session builder. Bench, MicroBench,
-  * PeakMem, PlanDump, SpillProbe and StageProfile all call
-  * [[base]] and layer runner-specific overrides on top, so the plan a
-  * diagnostic tool profiles or dumps is the plan the bench actually
-  * runs — previously the identical 10-line config block was copy-pasted
-  * into all six mains, a guarantee nothing enforced (ADVICE r15).
+  * PeakMem, PlanDump, SpillProbe, StageProfile, Explain and ExplainOne
+  * all call [[base]] and layer runner-specific overrides on top, so the
+  * plan a diagnostic tool profiles, dumps or prints is the plan the
+  * bench actually runs — previously the identical 10-line config block
+  * was copy-pasted into each main, a guarantee nothing enforced
+  * (ADVICE r15).
   *
   * Config rationale (applies to every runner):
   *  - master `local[$cpus]` with `cpus` from `$SPARK_GRAFT_CPUS`: the

@@ -22,9 +22,10 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def df(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Driver-owned sessions (Verify) are built without GraftExtensions;
-    // register() is idempotent and cheap, and every query loads at least
-    // one table, so this guarantees graft_* functions resolve everywhere.
+    // The run-time install of the one function catalog (GraftFunctions),
+    // for sessions built without GraftExtensions (Verify, a host
+    // application's own session). Idempotent and cheap; every query
+    // loads a table, so no query registers functions itself.
     graft.functions.GraftFunctions.register(spark)
     val raw = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") raw.schema("ts").dataType match {

@@ -6,13 +6,19 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType}
 
-/** Registration of graft's custom Catalyst functions.
+/** graft's function catalog: the `graft_*` kernels ([[builders]]), the
+  * reference's own SQL names ([[ReferenceNames.builders]]) and the
+  * non-admin table functions ([[ReferenceNames.tableFunctions]]).
   *
-  * Two paths:
-  *  - [[GraftExtensions]] for `SparkSession.builder.withExtensions(...)`
-  *    (the idiomatic way — used by tests/Bench);
-  *  - [[GraftFunctions.register]] for sessions we didn't build
-  *    (the driver-owned Verify session) — idempotent.
+  * One catalog, two install points that read it:
+  *  - [[GraftExtensions]] injects it when a session is built
+  *    `withExtensions(new GraftExtensions)` (GraftSession.base, tests);
+  *  - [[GraftFunctions.register]] installs it at run time on sessions
+  *    built without the extension (Verify, a host application's own
+  *    session);
+  *    [[graft.Tables.df]] calls it, so every query gets it. Idempotent.
+  * The admin table functions are in neither: only
+  * [[ReferenceNames.registerAdmin]] or an admin SparkConf install them.
   */
 object GraftFunctions {
 
@@ -125,10 +131,8 @@ object GraftFunctions {
       GraftPropertyGet(args(0), args(1))
     })
 
-  /** The reference's own SQL names (ReferenceNames), exposed for the
-    * extensions path so withExtensions-built sessions get them too.
-    */
-  private[functions] def ReferenceScalarNames = ReferenceNames.builders
+  /** Every scalar name graft installs. */
+  val scalars: Seq[(String, Seq[Expression] => Expression)] = builders ++ ReferenceNames.builders
 
   private val registered = new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()
 
@@ -139,54 +143,32 @@ object GraftFunctions {
     if (!registered.containsKey(spark)) {
       val registry =
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.functionRegistry
-      builders.foreach { case (name, b) =>
+      scalars.foreach { case (name, b) =>
         registry.createOrReplaceTempFunction(name, b, "scala_udf")
       }
-      ReferenceNames.register(spark)
+      ReferenceNames.install(spark, ReferenceNames.tableFunctions)
+      // The admin five exist only on sessions whose CONTEXT was built
+      // admin (SparkConf, immutable from SQL) — reference query.rs:152.
+      if (ReferenceNames.adminFromSparkConf(spark)) ReferenceNames.registerAdmin(spark)
       registered.put(spark, java.lang.Boolean.TRUE)
     }
   }
 }
 
 /** `SparkSession.builder.withExtensions(new GraftExtensions)` installs
-  * every graft function at session build time.
+  * the whole catalog at session build time.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.builders.foreach { case (name, b) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        b))
+    GraftFunctions.scalars.foreach { case (name, b) =>
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo("graft.functions", name), b))
     }
-    GraftFunctions.ReferenceScalarNames.foreach { case (name, b) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        b))
-    }
-    ext.injectTableFunction((
-      FunctionIdentifier("view_instance"),
-      new ExpressionInfo("graft.functions", "view_instance"),
+    ReferenceNames.tableFunctions.foreach { case (name, b) =>
       // the builder needs the session for lake-dir resolution, which
       // injectTableFunction doesn't pass — resolve the active one
-      args => ReferenceNames.viewInstanceBuilder(SparkSession.active)(args)))
-    ext.injectTableFunction((
-      FunctionIdentifier("get_payload"),
-      new ExpressionInfo("graft.functions", "get_payload"),
-      args => ReferenceNames.getPayloadBuilder(SparkSession.active)(args)))
-    ext.injectTableFunction((
-      FunctionIdentifier("jsonb_each"),
-      new ExpressionInfo("graft.functions", "jsonb_each"),
-      args => ReferenceNames.jsonbEachBuilder(SparkSession.active)(args)))
-    ext.injectTableFunction((
-      FunctionIdentifier("jsonb_array_elements"),
-      new ExpressionInfo("graft.functions", "jsonb_array_elements"),
-      args => ReferenceNames.jsonbArrayElementsBuilder(SparkSession.active)(args)))
-    ext.injectTableFunction((
-      FunctionIdentifier("expand_histogram"),
-      new ExpressionInfo("graft.functions", "expand_histogram"),
-      args => ReferenceNames.expandHistogramBuilder(SparkSession.active)(args)))
+      ext.injectTableFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions", name), args => b(SparkSession.active)(args)))
+    }
     ext.injectResolutionRule(session => graft.plans.TimeRangeRewrite(session))
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.BandJoinStrategy)

@@ -389,7 +389,7 @@ object ReferenceNames {
     * [[registerAdmin]] explicitly (the analog of query.rs passing
     * is_admin=true into register_table_functions).
     */
-  private def adminFromSparkConf(spark: SparkSession): Boolean =
+  private[functions] def adminFromSparkConf(spark: SparkSession): Boolean =
     spark.sparkContext.getConf.getBoolean("spark.graft.admin", defaultValue = false)
 
   /** `list_partitions([root])` — reference
@@ -607,38 +607,45 @@ object ReferenceNames {
       .queryExecution.logical
   }
 
-  /** Install the alias names on a session we didn't build (idempotent
-    * via createOrReplace; cheap). The extensions path registers the
-    * same builders at session build time.
+  /** A table function's builder, given the session it resolves lake
+    * paths and registered views against.
     */
-  def register(spark: SparkSession): Unit = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-    builders.foreach { case (name, b) =>
-      ss.functionRegistry.createOrReplaceTempFunction(name, b, "scala_udf")
-    }
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "view_instance", viewInstanceBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "get_payload", getPayloadBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "jsonb_each", jsonbEachBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "jsonb_array_elements", jsonbArrayElementsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "expand_histogram", expandHistogramBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "list_partitions", listPartitionsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "list_view_sets", listViewSetsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "process_spans", processSpansBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "parse_block", parseBlockBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "perfetto_trace_chunks", perfettoTraceChunksBuilder(spark), "scala_udf")
-    // The admin five exist only on sessions whose CONTEXT was built
-    // admin (SparkConf, immutable from SQL) — reference query.rs:152.
-    if (adminFromSparkConf(spark)) registerAdmin(spark)
+  type TableFunctionBuilder = SparkSession => Seq[Expression] => LogicalPlan
+
+  /** The non-admin table functions. [[GraftExtensions]] injects them at
+    * session build time and [[GraftFunctions.register]] installs them
+    * at run time; both read this one list.
+    */
+  val tableFunctions: Seq[(String, TableFunctionBuilder)] = Seq(
+    "view_instance" -> viewInstanceBuilder _,
+    "get_payload" -> getPayloadBuilder _,
+    "jsonb_each" -> jsonbEachBuilder _,
+    "jsonb_array_elements" -> jsonbArrayElementsBuilder _,
+    "expand_histogram" -> expandHistogramBuilder _,
+    "list_partitions" -> listPartitionsBuilder _,
+    "list_view_sets" -> listViewSetsBuilder _,
+    "process_spans" -> processSpansBuilder _,
+    "parse_block" -> parseBlockBuilder _,
+    "perfetto_trace_chunks" -> perfettoTraceChunksBuilder _)
+
+  /** The admin five: never injected at build time, installed only by
+    * [[registerAdmin]].
+    */
+  private val adminTableFunctions: Seq[(String, TableFunctionBuilder)] = Seq(
+    "retire_partitions" -> retirePartitionsBuilder _,
+    "materialize_partitions" -> materializePartitionsBuilder _,
+    "regenerate_partitions" -> regeneratePartitionsBuilder _,
+    "retire_partition_by_file" -> retireByFileBuilder _,
+    "retire_partition_by_metadata" -> retireByMetadataBuilder _)
+
+  /** Bind `fns` to `spark` and install them (idempotent via
+    * createOrReplace; cheap).
+    */
+  private[functions] def install(spark: SparkSession,
+      fns: Seq[(String, TableFunctionBuilder)]): Unit = {
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.tableFunctionRegistry
+    fns.foreach { case (name, b) => registry.createOrReplaceTempFunction(name, b(spark), "scala_udf") }
   }
 
   /** Register the admin five (retire/materialize/regenerate_partitions,
@@ -649,17 +656,5 @@ object ReferenceNames {
     * reference registering the admin table functions only after its
     * server authenticated `is_admin` (query.rs:150-176).
     */
-  def registerAdmin(spark: SparkSession): Unit = {
-    val ss = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "retire_partitions", retirePartitionsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "materialize_partitions", materializePartitionsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "regenerate_partitions", regeneratePartitionsBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "retire_partition_by_file", retireByFileBuilder(spark), "scala_udf")
-    ss.tableFunctionRegistry.createOrReplaceTempFunction(
-      "retire_partition_by_metadata", retireByMetadataBuilder(spark), "scala_udf")
-  }
+  def registerAdmin(spark: SparkSession): Unit = install(spark, adminTableFunctions)
 }

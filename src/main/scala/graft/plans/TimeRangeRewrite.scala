@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import scala.util.control.NonFatal
+
 /** Analyzer rule mirroring the reference's TableScanRewrite
   * (reference: rust/analytics/src/lakehouse/table_scan_rewrite.rs):
   * when a session declares a query time range, every scan exposing an
@@ -245,6 +247,10 @@ object TimeRangeRewrite {
           }
           parsed
       }
-    } catch { case _: Throwable => None }
+    } catch {
+      // an unreadable marker means "no date pruning"; fatal errors
+      // (OOM, interrupts) are not a marker problem and propagate
+      case NonFatal(_) => None
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
@@ -12,8 +12,6 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   * totally ordered so the DuckDB oracle hashes identically.
   */
 object CoreSql {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.df(s, dir, n)
 
   /** Decimal-money FRAGMENTS, written in the syntax subset valid in
     * BOTH Spark `expr(...)` and DuckDB SQL — each site interpolates
@@ -47,7 +45,7 @@ object CoreSql {
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("q1_agg", (s, dir) => {
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
       l.where(col("l_shipdate").cast("date") <= lit("2000-09-02"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -76,9 +74,9 @@ object CoreSql {
       ORDER BY l_returnflag, l_linestatus"""), headline = true),
 
     GraftQuery("q3_join_topk", (s, dir) => {
-      val c = t(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
-      val o = t(s, dir, "orders").where(col("o_orderdate").cast("date") < lit("1998-03-15"))
-      val l = t(s, dir, "lineitem").where(col("l_shipdate").cast("date") > lit("1998-03-15"))
+      val c = Tables.df(s, dir, "customer").where(col("c_mktsegment") === "BUILDING")
+      val o = Tables.df(s, dir, "orders").where(col("o_orderdate").cast("date") < lit("1998-03-15"))
+      val l = Tables.df(s, dir, "lineitem").where(col("l_shipdate").cast("date") > lit("1998-03-15"))
       // Join-then-group, deliberately NOT eager-agged (r13 fourth-decade
       // probe, PLANS.md): pre-summing revenue per l_orderkey below the
       // join forces a full lineitem exchange at EVERY scale — an 11×
@@ -109,14 +107,14 @@ object CoreSql {
       LIMIT 10"""), headline = true),
 
     GraftQuery("q5_multi_join", (s, dir) => {
-      val r = t(s, dir, "region")
-      val n = t(s, dir, "nation")
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
+      val r = Tables.df(s, dir, "region")
+      val n = Tables.df(s, dir, "nation")
+      val c = Tables.df(s, dir, "customer")
+      val o = Tables.df(s, dir, "orders")
         .where(col("o_orderdate").cast("date") >= lit("1996-01-01") &&
                col("o_orderdate").cast("date") < lit("1997-01-01"))
-      val l = t(s, dir, "lineitem")
-      val su = t(s, dir, "supplier")
+      val l = Tables.df(s, dir, "lineitem")
+      val su = Tables.df(s, dir, "supplier")
       // dims are tiny: broadcast them; the big join l⋈o shuffles on orderkey once
       broadcast(r).join(broadcast(n), col("r_regionkey") === col("n_regionkey"))
         .join(c, col("n_nationkey") === col("c_nationkey"))
@@ -143,8 +141,8 @@ object CoreSql {
       ORDER BY r_name, n_name"""), headline = true),
 
     GraftQuery("q_star_broadcast", (s, dir) => {
-      val p = t(s, dir, "part")
-      val l = t(s, dir, "lineitem")
+      val p = Tables.df(s, dir, "part")
+      val l = Tables.df(s, dir, "lineitem")
       l.join(p, col("l_partkey") === col("p_partkey"))
         .groupBy("p_brand")
         .agg(count(lit(1)).as("n_items"),
@@ -159,7 +157,7 @@ object CoreSql {
       GROUP BY p_brand ORDER BY p_brand""")),
 
     GraftQuery("q_window_funcs", (s, dir) => {
-      val e = t(s, dir, "events").where(col("user_id") < 20)
+      val e = events(s, dir).where(col("user_id") < 20)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val wv = Window.partitionBy("user_id").orderBy(col("value").desc, col("event_id"))
       e.select(col("user_id"), col("event_id"), col("value"),
@@ -178,7 +176,7 @@ object CoreSql {
       ORDER BY user_id, rn""")),
 
     GraftQuery("q_time_bucket", (s, dir) => {
-      val e = t(s, dir, "events")
+      val e = events(s, dir)
       e.groupBy(epochMs(date_trunc("hour", col("ts"))).as("bucket_ms"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           expr(money(s"sum($decValue)")).as("sum_value"),
@@ -194,7 +192,7 @@ object CoreSql {
       FROM events GROUP BY 1, 2 ORDER BY bucket_ms, event_type"""), headline = true),
 
     GraftQuery("q_topk_per_group", (s, dir) => {
-      val e = t(s, dir, "events")
+      val e = events(s, dir)
       val w = Window.partitionBy("event_type").orderBy(col("value").desc, col("event_id"))
       e.select(col("event_type"), col("event_id"), col("value"),
           row_number().over(w).as("rk"))
@@ -207,7 +205,7 @@ object CoreSql {
         FROM events) WHERE rk <= 3 ORDER BY event_type, rk""")),
 
     GraftQuery("q_count_distinct", (s, dir) => {
-      val e = t(s, dir, "events")
+      val e = events(s, dir)
       e.groupBy("event_type")
         .agg(countDistinct("user_id").as("n_users"),
           count(lit(1)).as("n_events"),
@@ -220,7 +218,7 @@ object CoreSql {
 
     GraftQuery("q_approx_distinct", (s, dir) => {
       // engine-specific sketches (HLL++ / approx quantile) — no cross-engine oracle
-      val e = t(s, dir, "events")
+      val e = events(s, dir)
       e.groupBy("event_type")
         .agg(approx_count_distinct("user_id").as("approx_users"),
           round(element_at(percentile_approx(col("value"), array(lit(0.5), lit(0.95)), lit(10000)), 1), 2).as("p50_approx"),
@@ -229,8 +227,8 @@ object CoreSql {
     }, None),
 
     GraftQuery("q_semi_anti", (s, dir) => {
-      val c = t(s, dir, "customer")
-      val ok = t(s, dir, "orders").select("o_custkey")
+      val c = Tables.df(s, dir, "customer")
+      val ok = Tables.df(s, dir, "orders").select("o_custkey")
       val withO = c.join(ok, col("c_custkey") === col("o_custkey"), "left_semi")
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n_with_orders"))
       val without = c.join(ok, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -249,8 +247,8 @@ object CoreSql {
       GROUP BY c_mktsegment ORDER BY c_mktsegment""")),
 
     GraftQuery("q_set_ops", (s, dir) => {
-      val cn = t(s, dir, "customer").select(col("c_nationkey").as("nk")).distinct()
-      val sn = t(s, dir, "supplier").select(col("s_nationkey").as("nk")).distinct()
+      val cn = Tables.df(s, dir, "customer").select(col("c_nationkey").as("nk")).distinct()
+      val sn = Tables.df(s, dir, "supplier").select(col("s_nationkey").as("nk")).distinct()
       cn.intersect(sn).select(lit("both").as("tag"), col("nk"))
         .unionAll(cn.except(sn).select(lit("cust_only").as("tag"), col("nk")))
         .orderBy("tag", "nk")
@@ -263,7 +261,7 @@ object CoreSql {
       ORDER BY tag, nk""")),
 
     GraftQuery("q_percentiles", (s, dir) => {
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
       l.agg(
         round(percentile(col("l_extendedprice"), lit(0.25)), 2).as("p25"),
         round(percentile(col("l_extendedprice"), lit(0.5)), 2).as("p50"),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 
@@ -11,12 +10,10 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   */
 object CoreSqlExt {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.df(s, dir, n)
-
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("q_rollup", (s, dir) => {
-      t(s, dir, "lineitem")
+      Tables.df(s, dir, "lineitem")
         .rollup("l_returnflag", "l_linestatus")
         .agg(count(lit(1)).as("n"), round(sum("l_quantity"), 2).as("sum_qty"))
         .select(
@@ -36,8 +33,8 @@ object CoreSqlExt {
     GraftQuery("q_exists_subquery", (s, dir) => {
       // customers whose orders include a high-priority one: correlated
       // EXISTS expressed as a semi join (what Catalyst rewrites EXISTS to)
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").where(col("o_orderpriority") === "1-URGENT")
+      val c = Tables.df(s, dir, "customer")
+      val o = Tables.df(s, dir, "orders").where(col("o_orderpriority") === "1-URGENT")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
         .groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n_customers"), round(avg("c_acctbal"), 4).as("avg_bal"))
@@ -52,7 +49,7 @@ object CoreSqlExt {
 
     GraftQuery("q_scalar_subquery", (s, dir) => {
       // parts priced above the global average — scalar subquery shape
-      val p = t(s, dir, "part")
+      val p = Tables.df(s, dir, "part")
       val avgPrice = p.agg(avg("p_retailprice").as("ap"))
       p.crossJoin(broadcast(avgPrice))
         .where(col("p_retailprice") > col("ap"))
@@ -66,7 +63,7 @@ object CoreSqlExt {
       GROUP BY p_brand ORDER BY p_brand""")),
 
     GraftQuery("q_string_funcs", (s, dir) => {
-      val p = t(s, dir, "part").where(col("p_partkey") < 500)
+      val p = Tables.df(s, dir, "part").where(col("p_partkey") < 500)
       p.select(col("p_partkey"),
           upper(col("p_name")).as("uname"),
           lower(col("p_brand")).as("lbrand"),
@@ -88,7 +85,7 @@ object CoreSqlExt {
       FROM part WHERE p_partkey < 500 ORDER BY p_partkey""")),
 
     GraftQuery("q_date_arith", (s, dir) => {
-      val o = t(s, dir, "orders").where(col("o_orderkey") < 2000)
+      val o = Tables.df(s, dir, "orders").where(col("o_orderkey") < 2000)
       val d = col("o_orderdate").cast("date")
       o.select(col("o_orderkey"),
           year(d).as("y"), month(d).as("m"), dayofmonth(d).as("d"),
@@ -112,7 +109,7 @@ object CoreSqlExt {
       // lottery flipped its last cent at the sf10 decade; the shared
       // fragment is valid in both engines' SQL, so the arithmetic
       // cannot drift — PLANS.md round-9)
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
       l.groupBy("l_returnflag")
         .agg(
           sum(when(col("l_discount") > 0.05, lit(1)).otherwise(lit(0))).as("n_high_disc"),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType}
 
@@ -11,12 +10,10 @@ import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StringType}
   */
 object CoreSqlExt2 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.df(s, dir, n)
-
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("q_cube", (s, dir) => {
-      t(s, dir, "orders")
+      Tables.df(s, dir, "orders")
         .cube("o_orderstatus", "o_orderpriority")
         .agg(count(lit(1)).as("n"),
           expr(CoreSql.money(s"sum(${CoreSql.decTotalPrice})")).as("total"))
@@ -35,12 +32,12 @@ object CoreSqlExt2 {
       ORDER BY o_orderstatus, o_orderpriority""")),
 
     GraftQuery("q7_nation_pairs", (s, dir) => {
-      val su = t(s, dir, "supplier")
-      val l = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n1 = t(s, dir, "nation").select(col("n_nationkey").as("nk1"), col("n_name").as("supp_nation"))
-      val n2 = t(s, dir, "nation").select(col("n_nationkey").as("nk2"), col("n_name").as("cust_nation"))
+      val su = Tables.df(s, dir, "supplier")
+      val l = Tables.df(s, dir, "lineitem")
+      val o = Tables.df(s, dir, "orders")
+      val c = Tables.df(s, dir, "customer")
+      val n1 = Tables.df(s, dir, "nation").select(col("n_nationkey").as("nk1"), col("n_name").as("supp_nation"))
+      val n2 = Tables.df(s, dir, "nation").select(col("n_nationkey").as("nk2"), col("n_name").as("cust_nation"))
       l.join(su, col("l_suppkey") === col("s_suppkey"))
         .join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
@@ -73,7 +70,7 @@ object CoreSqlExt2 {
 
     GraftQuery("m_json_each", (s, dir) => {
       // jsonb_each shape: explode an object into (key, value) rows
-      val e = t(s, dir, "events").where(col("event_id") < 2000)
+      val e = events(s, dir).where(col("event_id") < 2000)
       val parsed = from_json(col("props"), MapType(StringType, StringType))
       e.select(col("event_id"), explode(parsed).as(Seq("key", "value")))
         .orderBy("event_id", "key")
@@ -86,7 +83,7 @@ object CoreSqlExt2 {
 
     GraftQuery("m_json_elements", (s, dir) => {
       // jsonb_array_elements shape: explode a JSON array with ordinality
-      val e = t(s, dir, "events").where(col("event_id") < 2000)
+      val e = events(s, dir).where(col("event_id") < 2000)
       val k = get_json_object(col("props"), "$.k")
       val arr = concat(lit("["), k, lit(","), (col("event_id") % 5).cast("string"), lit(",7]"))
       e.select(col("event_id"),

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{GraftQuery, Tables}
 import graft.operators.AsofJoin
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
@@ -13,14 +12,12 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   */
 object CoreSqlExt3 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.df(s, dir, n)
-
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("q2_min_per_group", (s, dir) => {
       // Q2 shape: per-part minimum supplier balance, then the suppliers
       // achieving it (correlated-aggregate subquery → window rewrite)
-      val su = t(s, dir, "supplier")
+      val su = Tables.df(s, dir, "supplier")
       // every (part, supplier) pairing via partkey/suppkey arithmetic
       // isn't in the data model; use nationkey as the grouping link:
       // cheapest supplier per nation, then parts sized <10 counted per
@@ -41,10 +38,10 @@ object CoreSqlExt3 {
     GraftQuery("q9_profit", (s, dir) => {
       // Q9 shape: profit by nation and year for parts matching a name
       // pattern; profit = revenue - retail cost share
-      val p = t(s, dir, "part").where(col("p_name").like("%widget%"))
-      val su = t(s, dir, "supplier")
-      val n = t(s, dir, "nation")
-      val l = t(s, dir, "lineitem")
+      val p = Tables.df(s, dir, "part").where(col("p_name").like("%widget%"))
+      val su = Tables.df(s, dir, "supplier")
+      val n = Tables.df(s, dir, "nation")
+      val l = Tables.df(s, dir, "lineitem")
       l.join(p, col("l_partkey") === col("p_partkey"))
         .join(su, col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
@@ -72,18 +69,18 @@ object CoreSqlExt3 {
       // every dimension (part/customer-side nations/region/supplier)
       // broadcasts. Customer is mid-size — left to AQE, which picks
       // broadcast at these SFs and shuffle at cluster scale.
-      val p = t(s, dir, "part").where(col("p_type") === "ECONOMY")
-      val r = t(s, dir, "region").where(col("r_name") === "ASIA")
-      val n1 = t(s, dir, "nation").select(col("n_nationkey").as("c_nk"), col("n_regionkey"))
-      val n2 = t(s, dir, "nation").select(col("n_nationkey").as("s_nk"), col("n_name").as("nation"))
+      val p = Tables.df(s, dir, "part").where(col("p_type") === "ECONOMY")
+      val r = Tables.df(s, dir, "region").where(col("r_name") === "ASIA")
+      val n1 = Tables.df(s, dir, "nation").select(col("n_nationkey").as("c_nk"), col("n_regionkey"))
+      val n2 = Tables.df(s, dir, "nation").select(col("n_nationkey").as("s_nk"), col("n_name").as("nation"))
       val vol = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-      t(s, dir, "lineitem")
+      Tables.df(s, dir, "lineitem")
         .join(p, col("l_partkey") === col("p_partkey"))
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(t(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
+        .join(Tables.df(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(Tables.df(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .join(broadcast(n1), col("c_nationkey") === col("c_nk"))
         .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .join(t(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
+        .join(Tables.df(s, dir, "supplier"), col("l_suppkey") === col("s_suppkey"))
         .join(broadcast(n2), col("s_nationkey") === col("s_nk"))
         .select(year(col("o_orderdate").cast("date")).as("o_year"), vol.as("volume"), col("nation"))
         .groupBy("o_year")
@@ -110,7 +107,7 @@ object CoreSqlExt3 {
     GraftQuery("m_sessionize", (s, dir) => {
       // gap-based sessionization: a >30-minute silence starts a new
       // session — cumulative sum over a boolean gap marker
-      val e = t(s, dir, "events")
+      val e = events(s, dir)
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val tMs = epochMs(col("ts"))
       val gap = (tMs - lag(tMs, 1).over(w)) > 1800000L
@@ -144,10 +141,10 @@ object CoreSqlExt3 {
     GraftQuery("q10_returned", (s, dir) => {
       // Q10 shape: top customers by revenue lost to returned items.
       // lineitem⋈orders shuffles; customer/nation broadcast.
-      val l = t(s, dir, "lineitem").where(col("l_returnflag") === "R")
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
+      val l = Tables.df(s, dir, "lineitem").where(col("l_returnflag") === "R")
+      val o = Tables.df(s, dir, "orders")
+      val c = Tables.df(s, dir, "customer")
+      val n = Tables.df(s, dir, "nation")
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
         .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
@@ -173,8 +170,8 @@ object CoreSqlExt3 {
       // Q12 shape (adapted to available columns): per return flag, how
       // many items belong to critical- vs normal-priority orders —
       // conditional counts after a fact-fact join
-      val l = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
+      val l = Tables.df(s, dir, "lineitem")
+      val o = Tables.df(s, dir, "orders")
       val crit = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .groupBy(col("l_returnflag"))
@@ -191,12 +188,12 @@ object CoreSqlExt3 {
     GraftQuery("q18_large_orders", (s, dir) => {
       // Q18 shape: orders whose total quantity exceeds a threshold,
       // with their customer — groupBy-HAVING feeding a join
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
       val big = l.groupBy("l_orderkey")
         .agg(sum("l_quantity").as("total_qty"))
         .where(col("total_qty") > 55.0)
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
+      val o = Tables.df(s, dir, "orders")
+      val c = Tables.df(s, dir, "customer")
       big.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
         .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
@@ -220,7 +217,7 @@ object CoreSqlExt3 {
     GraftQuery("q_unpivot", (s, dir) => {
       // UNPIVOT/melt: wide per-part numeric columns to (part, metric,
       // value) long form via stack — the inverse of q_pivot
-      t(s, dir, "part").where(col("p_partkey") <= 500)
+      Tables.df(s, dir, "part").where(col("p_partkey") <= 500)
         .select(col("p_partkey"),
           expr("stack(2, 'size', CAST(p_size AS DOUBLE), 'retail', p_retailprice) AS (metric, value)"))
         .withColumn("value", round(col("value"), 2))
@@ -234,8 +231,8 @@ object CoreSqlExt3 {
 
     GraftQuery("q_string_agg", (s, dir) => {
       // ordered string aggregation (listagg) — per-region nation roster
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
+      val n = Tables.df(s, dir, "nation")
+      val r = Tables.df(s, dir, "region")
       n.join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name")
         .agg(array_join(array_sort(collect_list(col("n_name"))), ",").as("nations"),
@@ -249,7 +246,7 @@ object CoreSqlExt3 {
 
     GraftQuery("q_median_mode", (s, dir) => {
       // exact median (interpolated) and modal category per return flag
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
       l.groupBy("l_returnflag")
         .agg(round(median(col("l_extendedprice")), 3).as("med_price"),
           round(median(col("l_quantity")), 3).as("med_qty"),
@@ -266,9 +263,9 @@ object CoreSqlExt3 {
       // PIVOT: per-nation order counts/revenue pivoted by order priority
       // class — Spark's relational pivot; the oracle uses conditional
       // aggregation (the universal PIVOT lowering)
-      val o = t(s, dir, "orders")
-      val c = t(s, dir, "customer")
-      val n = t(s, dir, "nation")
+      val o = Tables.df(s, dir, "orders")
+      val c = Tables.df(s, dir, "customer")
+      val n = Tables.df(s, dir, "nation")
       val cls = when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), "high")
         .otherwise("low")
       o.join(c, col("o_custkey") === col("c_custkey"))
@@ -318,7 +315,7 @@ object CoreSqlExt3 {
       // sliding/expanding frame semantics: ROWS moving average,
       // RANGE running sum over a value window, and frame-bounded
       // min/max — the frame-clause surface beyond q_window_funcs
-      val e = t(s, dir, "events").where(col("user_id") < 10)
+      val e = events(s, dir).where(col("user_id") < 10)
       val byTime = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
       val rows5 = byTime.rowsBetween(-4, 0)
       val rng = Window.partitionBy("user_id").orderBy(col("value"))
@@ -342,7 +339,7 @@ object CoreSqlExt3 {
     GraftQuery("q6_forecast", (s, dir) => {
       // Q6 shape: pure predicate scan + single agg — no join, no group;
       // all three filters must reach the parquet reader
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
       l.where(col("l_shipdate") >= "1996-01-01" && col("l_shipdate") < "1997-01-01" &&
           col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
         .agg(expr(CoreSql.money(s"sum(${CoreSql.decPrice} * cast(l_discount as decimal(4,2)))")).as("revenue"),
@@ -356,9 +353,9 @@ object CoreSqlExt3 {
 
     GraftQuery("q14_promo_share", (s, dir) => {
       // Q14 shape: conditional-revenue ratio over a month of shipments
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
         .where(col("l_shipdate") >= "1996-03-01" && col("l_shipdate") < "1996-04-01")
-      val p = t(s, dir, "part")
+      val p = Tables.df(s, dir, "part")
       val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
       l.join(p, col("l_partkey") === col("p_partkey"))
         .agg(round(lit(100.0) *
@@ -374,8 +371,8 @@ object CoreSqlExt3 {
     GraftQuery("q17_small_qty", (s, dir) => {
       // Q17 shape: per-part correlated average threshold — revenue from
       // lines under 50% of their part's average quantity
-      val l = t(s, dir, "lineitem")
-      val p = t(s, dir, "part").where(col("p_brand") === "Brand#1")
+      val l = Tables.df(s, dir, "lineitem")
+      val p = Tables.df(s, dir, "part").where(col("p_brand") === "Brand#1")
       val avgQ = l.groupBy(col("l_partkey").as("a_partkey"))
         .agg(avg("l_quantity").as("avg_qty"))
       l.join(p, col("l_partkey") === col("p_partkey"))
@@ -396,8 +393,8 @@ object CoreSqlExt3 {
     GraftQuery("q19_disjunctive", (s, dir) => {
       // Q19 shape: OR-of-ANDs predicate across the join — the planner
       // must still push the common join key and prune columns
-      val l = t(s, dir, "lineitem")
-      val p = t(s, dir, "part")
+      val l = Tables.df(s, dir, "lineitem")
+      val p = Tables.df(s, dir, "part")
       val cond =
         (col("p_brand") === "Brand#1" && col("p_size").between(1, 15) && col("l_quantity").between(1, 11)) ||
         (col("p_brand") === "Brand#2" && col("p_size").between(1, 25) && col("l_quantity").between(10, 20)) ||
@@ -417,8 +414,8 @@ object CoreSqlExt3 {
       // Q21 shape: double-correlated EXISTS / NOT EXISTS — suppliers on
       // multi-supplier orders (exists another supplier's line) where no
       // other supplier's line was returned (not exists r='R')
-      val l = t(s, dir, "lineitem")
-      val su = t(s, dir, "supplier")
+      val l = Tables.df(s, dir, "lineitem")
+      val su = Tables.df(s, dir, "supplier")
       // no distinct on the right sides: semi/anti joins are already
       // duplicate-insensitive, a distinct would only add a shuffle
       val l1 = l.select(col("l_orderkey").as("o1"), col("l_suppkey").as("s1"))
@@ -448,8 +445,8 @@ object CoreSqlExt3 {
       // salted fact-fact join (operators.Skew): hot order keys spread
       // over 8 salt partitions; result must equal the plain join, which
       // is exactly what the oracle computes
-      val l = t(s, dir, "lineitem")
-      val o = t(s, dir, "orders")
+      val l = Tables.df(s, dir, "lineitem")
+      val o = Tables.df(s, dir, "orders")
         .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
       graft.operators.Skew
         .saltedJoin(l, o, "l_orderkey", col("l_partkey") * lit(7L) + col("l_linenumber"), 8)
@@ -467,7 +464,7 @@ object CoreSqlExt3 {
       // temporal correlation: purchases within 30 min of each error,
       // per user — bucketed band join (operators.BandJoin), never a
       // per-key nested loop; oracle uses the direct inequality join
-      val e = t(s, dir, "events")
+      val e = events(s, dir)
       val errs = e.where(col("event_type") === "error")
         .select(col("user_id"), col("event_id"), col("ts"))
       val purch = e.where(col("event_type") === "purchase")
@@ -493,7 +490,7 @@ object CoreSqlExt3 {
       // backward as-of join: for each error event, the latest purchase
       // value at-or-before it for that user (ASOF JOIN semantics via
       // the union + carry-forward window — see operators.AsofJoin)
-      val e = t(s, dir, "events")
+      val e = events(s, dir)
       val errs = e.where(col("event_type") === "error")
         .select(col("user_id"), col("event_id"), epochMs(col("ts")).as("t_ms"))
       val meas = e.where(col("event_type") === "purchase")
@@ -526,7 +523,7 @@ object CoreSqlExt3 {
     GraftQuery("m_measure_rate", (s, dir) => {
       // counter→rate: per-(process, metric) delta over time delta,
       // the metrics-analysis pattern from the reference docs
-      val e = t(s, dir, "events").where(col("user_id") < 20)
+      val e = events(s, dir).where(col("user_id") < 20)
       val w = Window.partitionBy("user_id", "event_type").orderBy(col("ts"), col("event_id"))
       val tMs = epochMs(col("ts"))
       e.select(col("user_id"), col("event_type").as("name"), col("event_id"),

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 
@@ -21,16 +20,14 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   */
 object CoreSqlExt4 {
 
-  private def t(s: SparkSession, dir: String, n: String): DataFrame = Tables.df(s, dir, n)
-
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("q4_order_priority", (s, dir) => {
       // Q4 shape: correlated EXISTS → left-semi join, then count by
       // priority. "Late shipment" stands in for commit<receipt.
-      val o = t(s, dir, "orders")
+      val o = Tables.df(s, dir, "orders")
         .where(col("o_orderdate") >= "1997-01-01" && col("o_orderdate") < "1997-04-01")
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
       o.join(l, col("l_orderkey") === col("o_orderkey") &&
           col("l_shipdate") > col("o_orderdate"), "left_semi")
         .groupBy("o_orderpriority")
@@ -51,8 +48,8 @@ object CoreSqlExt4 {
       // (scalar-subquery HAVING). lineitem⋈supplier stands in for
       // partsupp; quantities are summed as BIGINT so the threshold
       // comparison is integer-exact in both engines.
-      val su = t(s, dir, "supplier").where(col("s_nationkey") < 5)
-      val flt = t(s, dir, "lineitem")
+      val su = Tables.df(s, dir, "supplier").where(col("s_nationkey") < 5)
+      val flt = Tables.df(s, dir, "lineitem")
         .join(su, col("l_suppkey") === col("s_suppkey"))
         .select(col("l_partkey"), col("l_quantity").cast("long").as("q"))
       val perPart = flt.groupBy("l_partkey").agg(sum("q").as("qty_value"))
@@ -79,8 +76,8 @@ object CoreSqlExt4 {
       // Q13 shape: LEFT OUTER join (customers with zero matching orders
       // must survive with count 0) → per-customer order count → second
       // aggregation over the counts (distribution histogram).
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").where(col("o_orderpriority") =!= "1-URGENT")
+      val c = Tables.df(s, dir, "customer")
+      val o = Tables.df(s, dir, "orders").where(col("o_orderpriority") =!= "1-URGENT")
       c.join(o, col("c_custkey") === col("o_custkey"), "left_outer")
         .groupBy("c_custkey")
         .agg(count(col("o_orderkey")).as("c_count"))
@@ -103,13 +100,13 @@ object CoreSqlExt4 {
       // explicit isNotNull keeps both branches' scan subtrees identical
       // (the supplier join pushes one into the main branch only), so AQE
       // reuses the groupBy stage — one fact scan instead of two
-      val l = t(s, dir, "lineitem")
+      val l = Tables.df(s, dir, "lineitem")
         .where(col("l_shipdate") >= "1999-01-01" && col("l_shipdate") < "1999-04-01" &&
           col("l_suppkey").isNotNull)
       val rev = l.groupBy("l_suppkey")
         .agg(sum(col("l_quantity").cast("long")).as("total_qty"))
       val top = rev.agg(max("total_qty").as("max_qty"))
-      val su = t(s, dir, "supplier")
+      val su = Tables.df(s, dir, "supplier")
       rev.crossJoin(broadcast(top))
         .where(col("total_qty") === col("max_qty"))
         .join(su, col("l_suppkey") === col("s_suppkey"))
@@ -130,11 +127,11 @@ object CoreSqlExt4 {
       // Q16 shape: NOT IN subquery (anti join — s_suppkey is never null
       // so anti ≡ NOT IN) + count(DISTINCT supplier) per part attribute
       // triple. lineitem provides the part↔supplier relation.
-      val badSupp = t(s, dir, "supplier").where(col("s_acctbal") < 0).select("s_suppkey")
-      val p = t(s, dir, "part")
+      val badSupp = Tables.df(s, dir, "supplier").where(col("s_acctbal") < 0).select("s_suppkey")
+      val p = Tables.df(s, dir, "part")
         .where(col("p_brand") =!= "Brand#13" && col("p_type") =!= "ECONOMY" &&
           col("p_size").isin(1, 4, 7, 10, 13, 16, 19, 22, 25))
-      t(s, dir, "lineitem")
+      Tables.df(s, dir, "lineitem")
         .join(badSupp, col("l_suppkey") === col("s_suppkey"), "left_anti")
         .join(p, col("l_partkey") === col("p_partkey"))
         .groupBy("p_brand", "p_type", "p_size")
@@ -154,15 +151,15 @@ object CoreSqlExt4 {
       // Q20 shape: nested correlated subqueries — suppliers holding a
       // >25% share of any matching part's yearly volume. share test is
       // qty*4 > part_total in exact integers (no 0.25*sum float).
-      val p = t(s, dir, "part").where(col("p_name").like("large%")).select("p_partkey")
-      val sp = t(s, dir, "lineitem")
+      val p = Tables.df(s, dir, "part").where(col("p_name").like("large%")).select("p_partkey")
+      val sp = Tables.df(s, dir, "lineitem")
         .where(col("l_shipdate") >= "1999-01-01" && col("l_shipdate") < "2000-01-01")
         .join(p, col("l_partkey") === col("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
         .agg(sum(col("l_quantity").cast("long")).as("qty"))
       val tot = sp.groupBy(col("l_partkey").as("t_partkey"))
         .agg(sum("qty").as("tot_qty"))
-      val su = t(s, dir, "supplier")
+      val su = Tables.df(s, dir, "supplier")
       sp.join(tot, col("l_partkey") === col("t_partkey"))
         .where(col("qty") * 4 > col("tot_qty"))
         .join(su, col("l_suppkey") === col("s_suppkey"))
@@ -190,11 +187,11 @@ object CoreSqlExt4 {
       // integer cents so the avg threshold is bit-identical across
       // engines (sum of BIGINT / count, one double division).
       val cents = round(col("c_acctbal") * 100, 0).cast("long")
-      val pos = t(s, dir, "customer")
+      val pos = Tables.df(s, dir, "customer")
         .select(col("c_custkey"), col("c_nationkey"), cents.as("cents"))
       val thr = pos.where(col("cents") > 0)
         .agg((sum("cents").cast("double") / count(lit(1))).as("avg_cents"))
-      val recent = t(s, dir, "orders")
+      val recent = Tables.df(s, dir, "orders")
         .where(col("o_orderdate") >= "2000-06-01").select("o_custkey")
       pos.crossJoin(broadcast(thr))
         .where(col("cents") > col("avg_cents"))

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.{Ann, Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
@@ -13,24 +12,6 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   * md5-based hashing (standardized) and left-to-right FP folds.
   */
 object LlmPipeline {
-
-  /** The test tables are single-file/single-row-group parquet, so the
-    * scan is one input split; the md5/shingle/cosine pipelines are
-    * CPU-bound and would run on one core until the first shuffle. An
-    * up-front repartition on the key spreads them across the cluster —
-    * on a real multi-split layout this is a no-op decision (splits
-    * already provide parallelism) and would be dropped.
-    */
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-  private def embs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "embeddings")
-      .repartition(Tables.workPartitions(s, dir, "embeddings"), col("vec_id"))
-  }
 
   /** DuckDB word-shingle expression fragments (see Dedup.wordShingles). */
   private def oracleShingles(n: Int): String = {
@@ -59,7 +40,7 @@ object LlmPipeline {
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("l_dedup_exact", (s, dir) => {
-      docs(s, dir).groupBy(md5(col("text")).as("h"))
+      docsWide(s, dir).groupBy(md5(col("text")).as("h"))
         .agg(count(lit(1)).as("n_copies"), min("doc_id").as("keeper"))
         .orderBy("h")
     }, Some("""
@@ -76,7 +57,7 @@ object LlmPipeline {
       // persist) so the materialization is GC-cleaned with the plan
       // instead of pinned in the CacheManager across later queries.
       val sh = Dedup.signatureAndHash56(
-          docs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
+          docsWide(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
           "shingles", numHashes = 8)
         .localCheckpoint()
       // materialized: the candidate self-join reads bands TWICE, and
@@ -130,7 +111,7 @@ object LlmPipeline {
     GraftQuery("l_dup_groups", (s, dir) => {
       // near-dup group assignment: similarity edges → connected
       // components → every doc labeled with its group's min doc_id
-      val sh = docs(s, dir).where(col("doc_id") < 40)
+      val sh = docsWide(s, dir).where(col("doc_id") < 40)
         .select(col("doc_id"), Dedup.wordShingles(col("text"), 2).as("s"))
       val edges = sh.as("x").join(sh.as("y"), col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
@@ -159,7 +140,7 @@ object LlmPipeline {
 
     GraftQuery("l_dedup_simhash", (s, dir) => {
       // md5-based SimHash (hex string) — bit-reproducible in DuckDB
-      val sh = docs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles"))
+      val sh = docsWide(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles"))
       sh.select(col("doc_id"), Dedup.simhashHex(col("shingles")).as("simhash"))
         .withColumn("bucket", substring(col("simhash"), 1, 4))
         .orderBy("doc_id")
@@ -186,7 +167,7 @@ object LlmPipeline {
       FROM hexstr ORDER BY doc_id""")),
 
     GraftQuery("l_ngram_jaccard", (s, dir) => {
-      val sh = docs(s, dir).where(col("doc_id") < 30)
+      val sh = docsWide(s, dir).where(col("doc_id") < 30)
         .select(col("doc_id"), Dedup.wordShingles(col("text"), 2).as("s"))
       val pairs = sh.as("x").join(sh.as("y"), col("x.doc_id") < col("y.doc_id"))
         .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"),
@@ -214,7 +195,7 @@ object LlmPipeline {
       // gate results are unchanged; on GenLake decade lakes it selects
       // the base replica's id range (replicas sit at offsets of 10⁷).
       // Found at the sf10 decade, where the uncapped join was 20B pairs.
-      val e = embs(s, dir).where(col("vec_id") < 20000)
+      val e = embsWide(s, dir).where(col("vec_id") < 20000)
         .select(col("vec_id"), col("embedding").as("e"))
         .withColumn("nrm", Ann.norm(col("e")))
       e.as("x").join(e.as("y"), col("x.vec_id") < col("y.vec_id"))
@@ -232,7 +213,7 @@ object LlmPipeline {
       ORDER BY a, b""")),
 
     GraftQuery("l_ann_topk", (s, dir) => {
-      val e = embs(s, dir)
+      val e = embsWide(s, dir)
       val q = e.where(col("vec_id") < 5)
       Ann.bruteForceTopK(e, q, k = 10)
         .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
@@ -253,7 +234,7 @@ object LlmPipeline {
     GraftQuery("l_ann_lsh", (s, dir) => {
       // bucketed scale path; planes are md5-derived constants, so the
       // oracle replays the same constants as SQL literals
-      val e = embs(s, dir)
+      val e = embsWide(s, dir)
       val q = e.where(col("vec_id") < 5)
       Ann.lshTopK(e, q, dim = 64, nPlanes = 6, k = 5)
         .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
@@ -282,7 +263,7 @@ object LlmPipeline {
     GraftQuery("l_ann_ivf", (s, dir) => {
       // IVF scale path: deterministic coarse centroids (vec_id-sample),
       // inverted-list probe — fully expressible in the oracle
-      val e = embs(s, dir)
+      val e = embsWide(s, dir)
       val q = e.where(col("vec_id") < 5)
       Ann.ivfTopK(e, q, nCentroids = 16, nProbe = 4, k = 5)
         .select(col("query_id"), col("rk"), col("neighbor_id"), round(col("cos"), 4).as("cos"))
@@ -316,7 +297,7 @@ object LlmPipeline {
       ORDER BY query_id, rk""")),
 
     GraftQuery("l_lang_id", (s, dir) => {
-      docs(s, dir).select(col("doc_id"), col("lang"),
+      docsWide(s, dir).select(col("doc_id"), col("lang"),
           TextAnalysis.langIdHeuristic(col("text")).as("predicted"))
         .orderBy("doc_id")
     }, Some("""
@@ -335,7 +316,7 @@ object LlmPipeline {
 
     GraftQuery("l_quality_score", (s, dir) => {
       val txt = col("text")
-      docs(s, dir).select(col("doc_id"),
+      docsWide(s, dir).select(col("doc_id"),
           TextAnalysis.tokenCount(txt).as("n_tokens"),
           round(TextAnalysis.meanTokenLength(txt), 4).as("mean_token_len"),
           round(TextAnalysis.punctRatio(txt), 4).as("punct_ratio"),
@@ -362,7 +343,7 @@ object LlmPipeline {
 
     GraftQuery("l_token_count", (s, dir) => {
       val txt = col("text")
-      docs(s, dir).select(col("doc_id"),
+      docsWide(s, dir).select(col("doc_id"),
           TextAnalysis.tokenCount(txt).as("ws_tokens"),
           TextAnalysis.bpeishTokenCount(txt).as("bpeish_tokens"),
           length(txt).cast("long").as("n_chars"))
@@ -386,7 +367,7 @@ object LlmPipeline {
       // the output projection (quality_e4): every value downstream of
       // the scorer is integer, so the composite is bit-robust by
       // construction — no float column ever reaches a hasher.
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
       // keeper election is a WINDOW min over the fingerprint, not a
       // groupBy + self-join (r15): min(doc_id) over (partition by h)
       // elects the same keeper with ONE exchange by h, and `scored`
@@ -456,7 +437,7 @@ object LlmPipeline {
       ORDER BY quality_e4 DESC, doc_id"""), headline = true),
 
     GraftQuery("l_fingerprint", (s, dir) => {
-      docs(s, dir).select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
+      docsWide(s, dir).select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
         .orderBy("doc_id")
     }, Some(s"""
       WITH tok AS (SELECT doc_id, $oracleTokens AS t FROM documents),

@@ -1,16 +1,13 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.Multimodal
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column operators (SURVEY §2 L12): binary payloads with
   * typed metadata, batched partition-local decode, frame sampling.
   */
 object LlmPipelineExt {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "documents")
 
   val queries: Seq[GraftQuery] = Seq(
 

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
@@ -34,21 +33,10 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   */
 object LlmPipelineExt10 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-  private def embs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "embeddings")
-      .repartition(Tables.workPartitions(s, dir, "embeddings"), col("vec_id"))
-  }
-
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("l_gram_matrix", (s, dir) => {
-      val q = embs(s, dir).select(
+      val q = embsWide(s, dir).select(
         transform(col("embedding").cast("array<double>"),
           x => round(x * 1000, 0).cast("long")).as("qv"))
       // ONE aggregate pass (graft_gram_upper, r15): each vector enters
@@ -81,7 +69,7 @@ object LlmPipelineExt10 {
       // row_number (doc_id tie-break) keeps the rank deterministic
       // under equal scores; pct = (rk-1)·10⁴ div (n-1), 0 for a
       // single-doc source.
-      val scored = docs(s, dir).select(col("doc_id"), col("source"),
+      val scored = docsWide(s, dir).select(col("doc_id"), col("source"),
         round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
           .cast("long").as("q10k"))
       val w = Window.partitionBy("source").orderBy(col("q10k"), col("doc_id"))
@@ -104,7 +92,7 @@ object LlmPipelineExt10 {
       FROM r ORDER BY doc_id""")),
 
     GraftQuery("l_length_histogram", (s, dir) => {
-      val d = docs(s, dir).select(col("source"),
+      val d = docsWide(s, dir).select(col("source"),
         TextAnalysis.tokenCount(col("text")).as("toks"))
       d.withColumn("bucket", length(bin(col("toks"))).cast("long") - 1L)
         .groupBy("source", "bucket")

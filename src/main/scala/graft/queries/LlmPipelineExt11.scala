@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,18 +28,12 @@ import org.apache.spark.sql.functions._
   */
 object LlmPipelineExt11 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-
   private val prefixTokens = 10
 
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("l_source_overlap", (s, dir) => {
-      val sh = docs(s, dir)
+      val sh = docsWide(s, dir)
         .select(col("source"), explode(Dedup.wordShingles(col("text"), 3)).as("g"))
         .distinct()
         .localCheckpoint() // feeds sizes AND both join sides
@@ -83,7 +76,7 @@ object LlmPipelineExt11 {
       // confusion matrix — the calibration view that says whether the
       // classifier is good enough to GATE on (and for which
       // languages). One (lang, predicted) HashAggregate.
-      docs(s, dir)
+      docsWide(s, dir)
         .select(col("lang"),
           graft.operators.TextAnalysis.langIdHeuristic(col("text")).as("predicted"))
         .groupBy("lang", "predicted")
@@ -119,7 +112,7 @@ object LlmPipelineExt11 {
       // mass, leftover) ride 1-row broadcast cross joins; the rank
       // window is over sources (tiny).
       val budget = 100000L
-      val toks = docs(s, dir)
+      val toks = docsWide(s, dir)
         .select(col("source"), TextAnalysis.tokenCount(col("text")).as("t"))
         .groupBy("source").agg(sum("t").as("n_tokens"))
       val tot = toks.agg(sum("n_tokens").as("tot"))
@@ -161,7 +154,7 @@ object LlmPipelineExt11 {
       // inflates eval. Composes the deterministic split rule (L25)
       // with the LSH near-dup edges (Jaccard ≥ 0.5): per ordered
       // split pair, the crossing count and a leak flag.
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
       val u = (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long").cast("double") / lit(4294967296.0))
       val splits = d.select(col("doc_id"),
@@ -201,7 +194,7 @@ object LlmPipelineExt11 {
       // corpus. Shingle doc-frequencies ride one (shingle) shuffle;
       // the probe join is shingle-keyed (fan-out = df, bounded by the
       // corpus's duplication itself); one per-doc agg closes it.
-      val sh = docs(s, dir)
+      val sh = docsWide(s, dir)
         .select(col("doc_id"), explode(Dedup.wordShingles(col("text"), 3)).as("g"))
         .localCheckpoint() // feeds the df build AND the probe join
       val df = sh.groupBy("g").agg(countDistinct("doc_id").as("df"))
@@ -235,7 +228,7 @@ object LlmPipelineExt11 {
       FROM pd ORDER BY doc_id""")),
 
     GraftQuery("l_prefix_families", (s, dir) => {
-      val p = docs(s, dir).select(col("doc_id"), col("source"),
+      val p = docsWide(s, dir).select(col("doc_id"), col("source"),
         md5(concat_ws(" ", slice(TextAnalysis.whitespaceTokens(col("text")), 1, prefixTokens)))
           .as("prefix_hash"))
       p.groupBy("prefix_hash")

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,12 +47,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmPipelineExt12 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-
   private val oracleTokens = "string_split_regex(trim(text), '\\s+')"
 
   /** DuckDB 3-gram shingle fragment over token list `t` (the
@@ -72,7 +65,7 @@ object LlmPipelineExt12 {
       // two-regex form the DuckDB oracle below keeps (the r11 stage
       // profile measured the regex passes at 97% of third-decade wall).
       val norm = call_function("graft_normalize", col("text"))
-      docs(s, dir)
+      docsWide(s, dir)
         .select(col("doc_id"), md5(norm).as("norm_h"), md5(col("text")).as("raw_h"))
         .groupBy("norm_h")
         .agg(count(lit(1)).as("n_docs"),
@@ -99,7 +92,7 @@ object LlmPipelineExt12 {
       // fused signature + 56-bit verify sets, one digest pass, one
       // string-free checkpoint (r13 item 2; attach longs per r12 item 1)
       val sig = Dedup.signatureAndHash56(
-          docs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
+          docsWide(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
           "shingles", numHashes = 8)
         .localCheckpoint()
       val sh = sig
@@ -160,7 +153,7 @@ object LlmPipelineExt12 {
 
     GraftQuery("l_shard_assign", (s, dir) => {
       val nShards = 8
-      val d = docs(s, dir).select(col("doc_id"), col("source"),
+      val d = docsWide(s, dir).select(col("doc_id"), col("source"),
         TextAnalysis.tokenCount(col("text")).as("toks"))
       // LPT-flavored round-robin: biggest docs spread across shards
       // first, inside each source partition (windows never cross
@@ -195,7 +188,7 @@ object LlmPipelineExt12 {
 
     GraftQuery("l_vocab_curve", (s, dir) => {
       // token kernel + outer-explode guard (see l_heavy_hitters)
-      val types = docs(s, dir)
+      val types = docsWide(s, dir)
         .select(explode_outer(TextAnalysis.whitespaceTokens(col("text"))).as("w"))
         .where(col("w").isNotNull)
         .groupBy("w").agg(count(lit(1)).as("cnt")) // partial-agg: corpus → vocab
@@ -284,7 +277,7 @@ object LlmPipelineExt12 {
       // collisions, which land IDENTICALLY in the DuckDB oracle (same
       // standardized digests — sz/df/shared all move together), so
       // cross-engine exactness holds by construction.
-      val sh = docs(s, dir)
+      val sh = docsWide(s, dir)
         .select(col("doc_id"),
           Dedup.hashShingles56(Dedup.wordShingles(col("text"), 3)).as("s"))
       // explode_OUTER, then drop the (never-occurring) null row:

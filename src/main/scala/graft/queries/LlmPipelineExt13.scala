@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Thirteenth LLM-pipeline tranche: ingest-time planning and drift.
@@ -41,12 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmPipelineExt13 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-
   private val oracleTokens = "string_split_regex(trim(text), '\\s+')"
   private val oracleShingles3 =
     "list_distinct(list_transform(range(1, GREATEST(len(t) - 2, 1) + 1), i -> array_to_string(t[i:i+2], ' ')))"
@@ -74,7 +68,7 @@ object LlmPipelineExt13 {
 
     GraftQuery("l_pack_plan", (s, dir) => {
       val W = 2048L
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
         .select(TextAnalysis.tokenCount(col("text")).as("toks"))
       // per-doc window math reduces map-side to three partial sums —
       // only (strategy-level scalars × partitions) cross the wire
@@ -133,7 +127,7 @@ object LlmPipelineExt13 {
       FROM st ORDER BY strategy""")),
 
     GraftQuery("l_temperature_mixture", (s, dir) => {
-      val bySource = docs(s, dir)
+      val bySource = docsWide(s, dir)
         .select(col("source"), TextAnalysis.tokenCount(col("text")).as("toks"))
         .groupBy("source").agg(count(lit(1)).as("n_docs"), sum("toks").as("tokens"))
         .withColumn("sq", isqrt(col("tokens")))
@@ -165,7 +159,7 @@ object LlmPipelineExt13 {
 
     GraftQuery("l_dedup_incremental", (s, dir) => {
       val existingSrc = (0 to 4).map(i => s"src$i")
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
       val isExisting = col("source").isin(existingSrc: _*)
       // fused signature + 56-bit verify sets, one digest pass, one
       // string-free checkpoint (r13 item 2; attach longs per r12 item 1)
@@ -252,7 +246,7 @@ object LlmPipelineExt13 {
       val q10k = round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
       // decile bucket 0..9 from the integer q10k (shared scorer with
       // l_curation_pipeline — same rounding, same oracle fragment)
-      val sb = docs(s, dir)
+      val sb = docsWide(s, dir)
         .select(col("source"), least(floor(q10k / 1000).cast("long"), lit(9L)).as("bucket"))
         .groupBy("source", "bucket").agg(count(lit(1)).as("n"))
         .localCheckpoint()

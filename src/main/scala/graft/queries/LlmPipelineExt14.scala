@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,12 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmPipelineExt14 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-
   private val q10kSql = """CAST(round(round(0.5 * stop_ratio + 0.3 * (1.0 - punct_ratio)
                 + 0.2 * LEAST(CAST(len(t) AS DOUBLE) / 200.0, 1.0), 4)
                * 10000.0, 0) AS BIGINT)"""
@@ -44,7 +37,7 @@ object LlmPipelineExt14 {
       val q10k = round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
       val u = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long").cast("double") / lit(4294967296.0)
-      val sb = docs(s, dir)
+      val sb = docsWide(s, dir)
         .select(
           when(u < 0.8, "train").when(u < 0.9, "val").otherwise("test").as("split"),
           least(floor(q10k / 1000).cast("long"), lit(9L)).as("bucket"))
@@ -113,7 +106,7 @@ object LlmPipelineExt14 {
 
     GraftQuery("l_novelty_curve", (s, dir) => {
       val norm = call_function("graft_normalize", col("text"))
-      val d = docs(s, dir).select(col("doc_id"), md5(norm).as("h"))
+      val d = docsWide(s, dir).select(col("doc_id"), md5(norm).as("h"))
         .localCheckpoint() // scalar + first-appearance + per-quarter reads
       // ingestion-order quarters off the id space (deterministic, no
       // sort): quarter = doc_id * 4 div (max_id + 1)

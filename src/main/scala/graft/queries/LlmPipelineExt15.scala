@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,14 +41,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmPipelineExt15 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-
-  private def embs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "embeddings")
-
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("l_intradoc_rep", (s, dir) => {
@@ -61,7 +53,7 @@ object LlmPipelineExt15 {
           transform(sequence(lit(1), greatest(cnt, lit(1))),
             i => array_join(slice(tokens, i, lit(3)), " ")))
         .otherwise(array(array_join(tokens, " ")))
-      docs(s, dir)
+      docsWide(s, dir)
         .select(col("doc_id"), col("source"),
           size(grams).cast("long").as("n_grams"),
           size(array_distinct(grams)).cast("long").as("n_distinct"))
@@ -85,7 +77,7 @@ object LlmPipelineExt15 {
       FROM g ORDER BY doc_id""")),
 
     GraftQuery("l_zipf_curve", (s, dir) => {
-      val tok = docs(s, dir)
+      val tok = docsWide(s, dir)
         .select(col("source"), explode(TextAnalysis.whitespaceTokens(col("text"))).as("w"))
       val cnts = tok.groupBy("source", "w").agg(count(lit(1)).as("cnt"))
       val tot = cnts.groupBy("source").agg(sum("cnt").as("src_tokens"))
@@ -126,7 +118,7 @@ object LlmPipelineExt15 {
       // projection, on each of the two scans (ScaleInvariantSpec's
       // kernel-in-filter net caught it). The cut materializes 4
       // narrow columns once; the kernel runs exactly once per row.
-      val d = docs(s, dir).select(col("doc_id"), col("source"), md5(norm).as("h"),
+      val d = docsWide(s, dir).select(col("doc_id"), col("source"), md5(norm).as("h"),
         TextAnalysis.tokenCount(col("text")).as("toks"))
         .localCheckpoint()
       val keep = d.groupBy("h").agg(min("doc_id").as("keep_id"))
@@ -198,7 +190,7 @@ object LlmPipelineExt15 {
           when(s0 * s0 > x, 1L).otherwise(0L)
       }
       val q10k = round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0).cast("long")
-      val d = docs(s, dir).select(col("source"),
+      val d = docsWide(s, dir).select(col("source"),
         TextAnalysis.tokenCount(col("text")).as("x"), q10k.as("y"))
       d.groupBy("source")
         .agg(count(lit(1)).as("n"),
@@ -264,7 +256,7 @@ object LlmPipelineExt15 {
       // giant families", which decides whether canonical election
       // (L47) or family-level drops pay for themselves.
       val norm = call_function("graft_normalize", col("text"))
-      docs(s, dir).select(md5(norm).as("h"))
+      docsWide(s, dir).select(md5(norm).as("h"))
         .groupBy("h").agg(count(lit(1)).as("sz"))
         .withColumn("size_bucket", length(bin(col("sz"))).cast("long") - 1L)
         .groupBy("size_bucket")

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.GraftQuery
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,9 +22,6 @@ import org.apache.spark.sql.functions._
   *    deterministic keeper election.
   */
 object LlmPipelineExt16 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame =
-    graft.Tables.df(s, dir, "documents")
 
   // 3 on the synthetic corpus: its duplicate mass is prefix-heavy and
   // tails diverge fast, so 3 tokens is where sign-off phrases repeat;

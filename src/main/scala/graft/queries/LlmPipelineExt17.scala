@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.{Ann, Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -47,18 +46,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmPipelineExt17 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-
-  private def embs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "embeddings")
-      .repartition(Tables.workPartitions(s, dir, "embeddings"), col("vec_id"))
-  }
-
   private val oracleTokens = "string_split_regex(trim(text), '\\s+')"
 
   private val oracleShingles3 =
@@ -96,7 +83,7 @@ object LlmPipelineExt17 {
       // exchange feeding the sa/sb verify joins (PLANS.md item 3);
       // longs carry the same sets at 8 B/shingle
       val sh = Dedup.signatureAndHash56(
-          docs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
+          docsWide(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
           "shingles", numHashes = 8)
         .localCheckpoint()
       val bands = Dedup.lshBands(sh, "doc_id", numHashes = 8, rowsPerBand = 2)
@@ -138,7 +125,7 @@ object LlmPipelineExt17 {
       FROM exd GROUP BY 1 ORDER BY threshold_e2"""), headline = true),
 
     GraftQuery("l_ann_nprobe_curve", (s, dir) => {
-      val e = embs(s, dir)
+      val e = embsWide(s, dir)
       val q = e.where(col("vec_id") < 5)
       val exact = Ann.bruteForceTopK(e, q, k = 5)
         .select("query_id", "neighbor_id")
@@ -210,7 +197,7 @@ object LlmPipelineExt17 {
       // int8-quantized squared norms are EXACT integers (the float
       // norms themselves are fold-order-dependent doubles — not
       // cross-engine comparable); same quantizer as l_embed_quantize
-      val e = embs(s, dir)
+      val e = embsWide(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
           col("embedding").cast("array<double>").as("v"))
         .withColumn("sc",
@@ -253,7 +240,7 @@ object LlmPipelineExt17 {
 
     GraftQuery("l_keyword_topk", (s, dir) => {
       // token kernel + outer-explode guard (see l_heavy_hitters)
-      val toks = docs(s, dir)
+      val toks = docsWide(s, dir)
         .select(col("doc_id"), explode_outer(TextAnalysis.whitespaceTokens(col("text"))).as("w"))
         .where(col("w").isNotNull)
       val tf = toks.groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
@@ -294,7 +281,7 @@ object LlmPipelineExt17 {
     GraftQuery("l_gate_agreement", (s, dir) => {
       val t = TextAnalysis.whitespaceTokens(col("text")) // kernel == composed split
       val stop = array(lit("the"), lit("and"), lit("of"), lit("to"), lit("in"))
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
         .withColumn("t", t)
         .withColumn("nw", size(col("t")).cast("long"))
         .withColumn("chars",

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-8 second LLM-pipeline tranche: gate-knob pricing and
@@ -40,12 +39,6 @@ import org.apache.spark.sql.functions._
   */
 object LlmPipelineExt18 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-
   private val oracleTokens = "string_split_regex(trim(text), '\\s+')"
 
   private val oracleShingles3 =
@@ -81,7 +74,7 @@ object LlmPipelineExt18 {
       // filter and once in the projection (ScaleInvariantSpec's
       // kernel-in-filter net caught it). The cut materializes two
       // longs per doc once; the kernel runs exactly once per row.
-      val scored = docs(s, dir).select(
+      val scored = docsWide(s, dir).select(
         round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)
           .cast("long").as("q10k"),
         // n_tokens off the SAME textstats kernel the score reads —
@@ -117,7 +110,7 @@ object LlmPipelineExt18 {
       // token kernel, byte-identical to the composed split
       val t = TextAnalysis.whitespaceTokens(col("text"))
       val prefix = md5(array_join(slice(t, 1, 16), " "))
-      val bySrc = docs(s, dir)
+      val bySrc = docsWide(s, dir)
         .select(prefix.as("norm_h"), col("source"))
         .groupBy("norm_h", "source").agg(count(lit(1)).as("n"))
       bySrc.groupBy("norm_h")
@@ -167,7 +160,7 @@ object LlmPipelineExt18 {
       // plus minhash-over-survivors did, and the checkpoint drops the
       // shingle strings entirely
       val d = Dedup.signatureAndHash56(
-          docs(s, dir)
+          docsWide(s, dir)
             .select(col("doc_id"), md5(col("text")).as("raw_h"), md5(norm).as("norm_h"),
               Dedup.wordShingles(col("text"), 3).as("shingles")),
           "shingles", numHashes = 8)
@@ -263,7 +256,7 @@ object LlmPipelineExt18 {
       // shuffle_hash-pinned (a static broadcast of a lake-growing side
       // never demotes — 179 MB built at sf10, r12 audit); a real fixed
       // eval set would broadcast.
-      val sh = docs(s, dir).select(col("doc_id"), col("source"),
+      val sh = docsWide(s, dir).select(col("doc_id"), col("source"),
         TextAnalysis.tokenCount(col("text")).as("toks"),
         explode(Dedup.wordShingles(col("text"), 3)).as("sh"))
       val bench = sh.where(col("source") === "src0")
@@ -320,7 +313,7 @@ object LlmPipelineExt18 {
       // fused signature + 56-bit verify sets, one digest pass, one
       // string-free checkpoint (r13 item 2; attach longs per r12 item 1)
       val sh = Dedup.signatureAndHash56(
-          docs(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
+          docsWide(s, dir).select(col("doc_id"), Dedup.wordShingles(col("text"), 3).as("shingles")),
           "shingles", numHashes = 8)
         .localCheckpoint()
       val bands = Dedup.lshBands(sh, "doc_id", numHashes = 8, rowsPerBand = 2)

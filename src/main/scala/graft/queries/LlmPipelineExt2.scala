@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.{Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 
@@ -13,15 +12,6 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   * sampling (hash-threshold, zero-shuffle), and PII redaction.
   */
 object LlmPipelineExt2 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "documents")
-
-  // single-file test parquet reads as ONE partition — the CPU-heavy
-  // explode/md5 pipelines repartition first (same as LlmPipeline); the
-  // scan-riding queries (sampling, PII scrub) deliberately do NOT, so
-  // they stay zero-shuffle
-  private def docsWide(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
 
   /** DuckDB word-shingle fragments (same family as LlmPipeline's). */
   private def oracleShingles(n: Int): String = {

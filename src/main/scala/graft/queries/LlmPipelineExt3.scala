@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
@@ -15,18 +14,6 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   * double) so the DuckDB oracle compares byte-identically.
   */
 object LlmPipelineExt3 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "documents")
-
-  // single-file test parquet reads as ONE partition — CPU-heavy
-  // explode/md5 pipelines repartition first (same rationale as
-  // LlmPipeline.docs); scan-riding scalar queries do NOT
-  private def docsWide(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-
-  private def embs(s: SparkSession, dir: String): DataFrame =
-    Tables.df(s, dir, "embeddings")
-      .repartition(Tables.workPartitions(s, dir, "embeddings"), col("vec_id"))
 
   private val oracleTokens = "string_split_regex(trim(text), '\\s+')"
 
@@ -68,7 +55,7 @@ object LlmPipelineExt3 {
       val e = col("embedding").cast("array<double>")
       val sc = greatest(array_max(transform(e, v => abs(v))) / lit(127.0), lit(1e-12))
       val q = transform(e, v => round(v / col("sc"), 0).cast("long"))
-      embs(s, dir)
+      embsWide(s, dir)
         .withColumn("sc", sc)
         .withColumn("q", q)
         .select(col("vec_id"), round(col("sc"), 6).as("scale"),
@@ -99,7 +86,7 @@ object LlmPipelineExt3 {
       // approximate dot idot·s_a·s_b is a product of identically-
       // computed doubles. Queries broadcast; the corpus never
       // shuffles.
-      val e = embs(s, dir).select(col("vec_id"),
+      val e = embsWide(s, dir).select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
         .withColumn("sc", greatest(array_max(transform(col("v"), x => abs(x))) / lit(127.0),
           lit(1e-12)))

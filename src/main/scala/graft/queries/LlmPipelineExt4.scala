@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import graft.operators.TextAnalysis
@@ -22,9 +22,6 @@ import graft.operators.TextAnalysis
   *    sampling-weight table every training pipeline carries).
   */
 object LlmPipelineExt4 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "documents")
-  private def embs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "embeddings")
 
   /** Assignments at the FIXED K=8 of the oracle gate: sample centroids
     * (the quantized vectors of vec_id 0..7) are deterministic and

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 import graft.operators.TextAnalysis.whitespaceTokens
@@ -33,13 +32,6 @@ import graft.operators.TextAnalysis.whitespaceTokens
   *    bit-exact across engines).
   */
 object LlmPipelineExt5 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "documents")
-
-  // single-file test parquet reads as ONE partition — the CPU-heavy
-  // explode/md5 pipelines repartition first (same as LlmPipeline)
-  private def docsWide(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
 
   private val oracleTokens = "string_split_regex(trim(text), '\\s+')"
 

@@ -48,8 +48,6 @@ object LlmPipelineExt6 {
   private val trainedCb =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
-  private def embs(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "embeddings")
-
   // the PQ machinery lives in [[Pq]] (shared with PqSpec's trained-
   // codebook path); these aliases keep the query bodies readable
   private def l2sq(a: Column, b: Column): Column = Pq.l2sq(a, b)

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.Bpe
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Curation-pipeline tranche 7: tokenizer SERVING — applying a trained
@@ -23,12 +22,6 @@ import org.apache.spark.sql.functions._
   * tokenizer deploys against a new document stream.
   */
 object LlmPipelineExt7 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
 
   private val oracleTokens = "string_split_regex(trim(text), '\\s+')"
 
@@ -105,7 +98,7 @@ object LlmPipelineExt7 {
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("l_bpe_encode", (s, dir) => {
-      val corpus = docs(s, dir)
+      val corpus = docsWide(s, dir)
       val (_, merges) = Bpe.train(corpus, "text", rounds = ranks)
       // the generated oracle unrolls EXACTLY `ranks` rounds; if the
       // corpus ran out of pairs early its empty top-CTE would CROSS

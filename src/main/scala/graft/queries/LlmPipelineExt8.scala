@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.GraftQuery
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
@@ -36,17 +36,6 @@ import graft.operators.TextAnalysis
   */
 object LlmPipelineExt8 {
 
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
-  private def embs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "embeddings")
-      .repartition(Tables.workPartitions(s, dir, "embeddings"), col("vec_id"))
-  }
-
   /** 2^0..2^31 as literals: variable-shift-free bit packing keeps the
     * expression a pure zip_with fold (whole-stage codegen).
     */
@@ -78,7 +67,7 @@ object LlmPipelineExt8 {
   def queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("l_ann_hamming", (s, dir) => {
-      val codes = signCodes(embs(s, dir)).localCheckpoint()
+      val codes = signCodes(embsWide(s, dir)).localCheckpoint()
       val q = codes.where(col("vec_id") < 5)
         .select(col("vec_id").as("query_id"),
           col("code_lo").as("q_lo"), col("code_hi").as("q_hi"))
@@ -110,7 +99,7 @@ object LlmPipelineExt8 {
       FROM r WHERE rk <= 10 ORDER BY query_id, rk"""), headline = true),
 
     GraftQuery("l_substring_dedup", (s, dir) => {
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
       val toks = d.select(col("doc_id"), TextAnalysis.whitespaceTokens(col("text")).as("t"))
       val wins = toks
         // outer explode + null guard: keeps the token kernel out of a
@@ -166,7 +155,7 @@ object LlmPipelineExt8 {
       // broadcast (it's vocabulary², corpus-sized) — then one per-doc
       // partial agg. Same two-shuffle budget as l_bigram_lm.
       val t = TextAnalysis.whitespaceTokens(col("text")) // kernel == composed split
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
       // outer explode + null guard (see l_bigram_lm): one-token docs
       // zip to an empty array -> null row -> dropped, row-identical
       val pairs = d.select(col("doc_id"), explode_outer(zip_with(
@@ -216,7 +205,7 @@ object LlmPipelineExt8 {
       FROM documents LEFT JOIN pd USING (doc_id) ORDER BY doc_id""")),
 
     GraftQuery("l_corpus_report", (s, dir) => {
-      val base = docs(s, dir).select(col("source"), col("lang"), col("n_chars"),
+      val base = docsWide(s, dir).select(col("source"), col("lang"), col("n_chars"),
         TextAnalysis.tokenCount(col("text")).as("toks"),
         md5(col("text")).as("h"))
       base.rollup(col("source"))

@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.{Cms, Dedup, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
@@ -35,12 +35,6 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   * window whose partitions are cluster-sized.
   */
 object LlmPipelineExt9 {
-
-  private def docs(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
-    Tables.df(s, dir, "documents")
-      .repartition(Tables.workPartitions(s, dir, "documents"), col("doc_id"))
-  }
 
   private val topK = 20
 
@@ -136,7 +130,7 @@ object LlmPipelineExt9 {
       // InferFiltersFromGenerate cannot land the kernel in a scan-side
       // filter (graft_tokens never returns null/empty — "" tokenizes
       // to [""] — so the outer form is row-identical)
-      val toks = docs(s, dir)
+      val toks = docsWide(s, dir)
         .select(explode_outer(TextAnalysis.whitespaceTokens(col("text"))).as("tok"))
         .where(col("tok").isNotNull)
         .localCheckpoint() // feeds the sketch build AND the exact counts
@@ -168,7 +162,7 @@ object LlmPipelineExt9 {
       FROM est ORDER BY exact_cnt DESC, token"""), headline = true),
 
     GraftQuery("l_source_diversity", (s, dir) => {
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
       val nd = d.groupBy("source").agg(count(lit(1)).as("n_docs"))
       // token kernel + outer-explode guard (see l_heavy_hitters)
       val tc = d.select(col("source"), explode_outer(TextAnalysis.whitespaceTokens(col("text"))).as("tok"))
@@ -211,7 +205,7 @@ object LlmPipelineExt9 {
       // (q10k desc, doc_id as tie-break). Unclustered docs are their
       // own canonical. Output: every doc labeled (cluster, quality,
       // survives?).
-      val d = docs(s, dir)
+      val d = docsWide(s, dir)
       val comp = Dedup.connectedComponents(lshEdges(d))
       val scored = d.select(col("doc_id"),
         round(TextAnalysis.qualityScore(col("text")) * lit(10000.0), 0)

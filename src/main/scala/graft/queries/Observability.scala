@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Lakehouse, Tables}
-import graft.functions.{GraftFunctions, Histograms}
+import graft.{GraftQuery, Lakehouse}
+import graft.functions.Histograms
 import graft.operators.SpanAssembly
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -14,15 +14,12 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   */
 object Observability {
 
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
   /** Histogram params used across the M5–M9 queries. */
   private val HStart = 0.0
   private val HEnd = 500.0
   private val HBins = 50
 
   private def histoPerType(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(s)
     events(s, dir).groupBy("event_type")
       .agg(Histograms.makeHistogram(HStart, HEnd, HBins, col("value")).as("h"))
   }
@@ -88,7 +85,6 @@ object Observability {
       FROM events GROUP BY 1, 2 ORDER BY time_bin_ms, level"""), headline = true),
 
     GraftQuery("m_property_get", (s, dir) => {
-      GraftFunctions.register(s)
       events(s, dir).select(col("event_id"), col("event_type"),
           call_function("graft_property_get", col("props"), lit("k")).cast("int").as("k"))
         .orderBy("event_id")
@@ -138,7 +134,6 @@ object Observability {
       // per-hour histogram sketches (one partial-agg pass; at scale the
       // sketches come straight from materialized minute partitions via
       // sum_histograms instead of raw events)
-      GraftFunctions.register(s)
       events(s, dir)
         .groupBy(epochMs(date_trunc("hour", col("ts"))).as("hour_ms"))
         .agg(Histograms.makeHistogram(HStart, HEnd, HBins, col("value")).as("h"))
@@ -185,7 +180,6 @@ object Observability {
     GraftQuery("m_histo_merge", (s, dir) => {
       // build per-minute histograms, then merge with sum_histograms —
       // must equal the direct histogram (merge associativity)
-      GraftFunctions.register(s)
       val perMin = events(s, dir)
         .groupBy(date_trunc("minute", col("ts")).as("minute"), col("event_type"))
         .agg(Histograms.makeHistogram(HStart, HEnd, HBins, col("value")).as("h"))

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Lakehouse, Tables}
+import graft.{GraftQuery, Lakehouse}
 import graft.functions.Colors
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Second tranche of the observability surface: JSON path/array
@@ -10,8 +9,6 @@ import org.apache.spark.sql.functions._
   * (M17), properties→jsonb normalization (M18).
   */
 object ObservabilityExt {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
 
   val queries: Seq[GraftQuery] = Seq(
 

@@ -1,8 +1,8 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Tenth observability tranche: the three trace-backend operators a
@@ -32,12 +32,6 @@ import org.apache.spark.sql.functions._
   * keep decision needs no second pass over spans.
   */
 object ObservabilityExt10 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   /** Per-span self time over the parent-linked frame (the
     * m_span_self_time computation, kept per-span here).

@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,12 +29,6 @@ import org.apache.spark.sql.functions._
   * a bounded per-group window.
   */
 object ObservabilityExt11 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   // SLO: error budget 25% (the synthetic stream runs ~20% errors, so
   // hours over budget are real but not constant); page when the hour

@@ -1,9 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import graft.functions.{GraftFunctions, Histograms}
-import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
+import graft.functions.Histograms
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -30,12 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object ObservabilityExt12 {
 
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
-
   // duration histogram: 0..2.5e9 ms in 50 bins (p99 span ≈ 1.0e9 ms,
   // max ≈ 2.44e9 on the sf0.01 corpus)
   private val HEnd = 2.5e9
@@ -45,7 +37,6 @@ object ObservabilityExt12 {
   val queries: Seq[GraftQuery] = Seq(
 
     GraftQuery("m_span_metrics", (s, dir) => {
-      GraftFunctions.register(s)
       spans(s, dir)
         .groupBy("name")
         .agg(Histograms.makeHistogram(0.0, HEnd, HBins, col("duration_ms").cast("double")).as("h"))

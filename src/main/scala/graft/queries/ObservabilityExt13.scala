@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,12 +23,6 @@ import org.apache.spark.sql.functions._
   * 50 rows), so the quantile scan costs nothing at any corpus size.
   */
 object ObservabilityExt13 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   private val binW = 5.0e7 // m_span_metrics bin width (2.5e9 / 50)
 

@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,8 +23,6 @@ import org.apache.spark.sql.functions._
   * partitioning end-to-end; nothing is per-event after the first agg.
   */
 object ObservabilityExt14 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
 
   private val dayMs = 86400000L
   // conversion window: each step must follow the previous within 24h
@@ -86,7 +83,6 @@ object ObservabilityExt14 {
       // store" audit every metrics backend runs before accepting a
       // label into an index. Extraction uses the native property_get
       // expression (codegen'd, same as M4); one partial-agg groupBy.
-      graft.functions.GraftFunctions.register(s)
       events(s, dir)
         .select(col("event_type"),
           call_function("graft_property_get", col("props"), lit("k")).as("label"))

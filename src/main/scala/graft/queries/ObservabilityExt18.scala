@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -22,12 +20,6 @@ import org.apache.spark.sql.functions._
   * ≤42 buckets — never over spans.
   */
 object ObservabilityExt18 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   // deploy cutover: the corpus midpoint (Jan 16 2024 00:00 UTC) —
   // same constant as m_deploy_compare so the two views agree

@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Lakehouse, Tables}
-import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftQuery, Lakehouse}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,12 +39,6 @@ import org.apache.spark.sql.functions._
   * day-grid cumulative window.
   */
 object ObservabilityExt19 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   private val hourMs = 3600000L
   private val dayMs = 86400000L

@@ -1,8 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
+import graft.GraftQuery
 import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
 
@@ -10,13 +9,6 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   * metadata views (M23/M24), arbitrary-stride date_bin (M25).
   */
 object ObservabilityExt2 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  /** Spans from the synthesized begin/end stream, shared by m_call_tree. */
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   /** The thread-span-assembly oracle CTE chain — the single source of
     * truth for every query whose DuckDB oracle needs assembled spans

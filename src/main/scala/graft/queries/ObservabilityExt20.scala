@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,12 +26,6 @@ import org.apache.spark.sql.functions._
   * is one day-grid partial agg + a cumulative window over days.
   */
 object ObservabilityExt20 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   private val dayMs = 86400000L
   private val sloRatioE6 = 250000L // same budget as m_burn_rate

@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,12 +31,6 @@ import org.apache.spark.sql.functions._
   *    by ONE partial agg after span assembly.
   */
 object ObservabilityExt21 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   /** Target merge-group payload size. Test-data blocks average ~9
     * bytes (props-length playback), so 64 exercises multi-group
@@ -227,7 +219,6 @@ object ObservabilityExt21 {
       // share a groupBy); at 100 TB the exact column is the audit you
       // run on a sample to size the sketch's bin budget, the sketch is
       // what dashboards serve.
-      graft.functions.GraftFunctions.register(s)
       val h = events(s, dir).groupBy("event_type").agg(
         graft.functions.Histograms.makeHistogram(0.0, 500.0, 50, col("value")).as("h"),
         percentile(col("value"), lit(0.95)).as("p95e"))

@@ -1,8 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Lakehouse, Tables}
-import graft.operators.SpanAssembly
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftQuery, Lakehouse}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -50,12 +48,6 @@ import org.apache.spark.sql.functions._
   * name; every raw-event touch is a partial-agg HashAggregate first.
   */
 object ObservabilityExt22 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
-  private def spans(s: SparkSession, dir: String): DataFrame =
-    SpanAssembly.beginEndSpans(events(s, dir), "user_id", epochMs(col("ts")), "event_id",
-      "event_type", col("event_type").isin("signup", "view"))
 
   private val oracleBlocks = """
       WITH b AS (

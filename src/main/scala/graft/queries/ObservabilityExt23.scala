@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -36,8 +35,6 @@ import org.apache.spark.sql.functions._
   * partial agg, values pre-quantized to exact e4 integers.
   */
 object ObservabilityExt23 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
 
   val queries: Seq[GraftQuery] = Seq(
 

@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.queries.{round => round} // DuckDB-compatible rounding (see package.scala)
@@ -13,8 +12,6 @@ import graft.queries.{round => round} // DuckDB-compatible rounding (see package
   * and log template mining.
   */
 object ObservabilityExt3 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
 
   val queries: Seq[GraftQuery] = Seq(
 

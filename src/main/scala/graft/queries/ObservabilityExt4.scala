@@ -1,7 +1,7 @@
 package graft.queries
 
-import graft.{GraftQuery, Lakehouse, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftQuery, Lakehouse}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Fifth observability tranche — the last of the reference's lakehouse
@@ -23,8 +23,6 @@ import org.apache.spark.sql.functions._
   *    materializes incrementally per partition.
   */
 object ObservabilityExt4 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
 
   /** Block identity on the test stream, as in m_blocks
     * (blocks_view.rs): (process, stream tag, minute bucket).

@@ -30,8 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object ObservabilityExt6 {
 
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
-
   /** Events explicitly hash-repartitioned by process for the perfetto
     * export. The whole span-assembly pipeline (both windows + the
     * pairing aggregate) rides ONE hashpartitioning(user_id) exchange;
@@ -46,8 +44,8 @@ object ObservabilityExt6 {
   private def eventsWide(s: SparkSession, dir: String): DataFrame =
     events(s, dir).repartition(Tables.workPartitions(s, dir, "events"), col("user_id"))
 
-  /** The shared thread-span assembly (same shape as
-    * ObservabilityExt2.spans / its oracleSpans CTE). Public: the
+  /** The shared thread-span assembly (same shape as the package
+    * `spans` loader / its oracleSpans CTE). Public: the
     * perfetto export trio (m_perfetto_packets, m_perfetto_chunks,
     * Graft.writeProcessTrace) must all derive spans identically or
     * their cross-checks (GraftApiSpec, PerfettoSpec) mean nothing.
@@ -62,8 +60,6 @@ object ObservabilityExt6 {
       .consecutiveSpans(eventsWide(s, dir), "user_id", epochMs(col("ts")), "event_id", "event_type")
       .withColumn("span_id", col("event_id"))
       .withColumn("depth", lit(0L))
-
-  private def spans(s: SparkSession, dir: String): DataFrame = perfettoThreadSpans(s, dir)
 
   /** Shared span-assembly oracle prefix — single source of truth in
     * [[ObservabilityExt2.oracleSpansCte]].
@@ -84,7 +80,7 @@ object ObservabilityExt6 {
       // packets, then begin+end packets per span in begin order.
       // The global windows below are process-scoped by construction —
       // bounded state, same as the reference's per-process writer.
-      val sp = spans(s, dir).where(col("user_id") === 9)
+      val sp = perfettoThreadSpans(s, dir).where(col("user_id") === 9)
       val w = Window.orderBy(col("begin_ms"), col("span_id"))
       val ranked = sp
         .withColumn("rn", row_number().over(w).cast("long"))

@@ -1,7 +1,6 @@
 package graft.queries
 
-import graft.{GraftQuery, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftQuery
 import org.apache.spark.sql.functions._
 
 /** Seventh observability tranche: the retention/expiry surface.
@@ -26,8 +25,6 @@ import org.apache.spark.sql.functions._
   * sweep is how an operator sizes a retention change safely.
   */
 object ObservabilityExt7 {
-
-  private def events(s: SparkSession, dir: String): DataFrame = Tables.df(s, dir, "events")
 
   /** Expiration horizon: 2024-01-20T00:00:00Z, mid-range of the test
     * stream so the plan splits meaningfully at every SF.

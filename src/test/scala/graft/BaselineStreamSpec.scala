@@ -15,7 +15,7 @@ case class NamedEvent(ts: Timestamp, name: String)
 class BaselineStreamSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ts(day: Int, hour: Int, minute: Int = 0): Timestamp =
+  private def ts(day: Int, hour: Int, minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-$day%02d $hour%02d:$minute%02d:00")
 
   test("hodBaseline: exact per-(name, hod) mean e4 over distinct days") {

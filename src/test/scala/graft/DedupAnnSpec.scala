@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Ann, Dedup, TextAnalysis}
-import org.apache.spark.sql.functions._
 
 class DedupAnnSpec extends SparkSpec {
   import spark.implicits._

@@ -355,6 +355,25 @@ class DocExamplesSpec extends SparkSpec {
     assert(bad.getMessage.contains("span_types"))
   }
 
+  test("function catalog: a fresh extension-built session resolves every non-admin name") {
+    // newSession() builds its SessionState through GraftExtensions and
+    // reads no table, so Tables.df's run-time install has not run: only
+    // what the extension injects at build time can resolve here
+    val fresh = spark.newSession()
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    def id(n: String) = org.apache.spark.sql.catalyst.FunctionIdentifier(n)
+    val tableFns = Seq("view_instance", "get_payload", "jsonb_each", "jsonb_array_elements",
+      "expand_histogram", "list_partitions", "list_view_sets", "process_spans",
+      "parse_block", "perfetto_trace_chunks")
+    val missingTables = tableFns.filterNot(n => fresh.tableFunctionRegistry.functionExists(id(n)))
+    assert(missingTables.isEmpty, s"table functions missing: ${missingTables.mkString(", ")}")
+    val scalars = (functions.GraftFunctions.builders ++ functions.ReferenceNames.builders).map(_._1)
+    val missingScalars = scalars.filterNot(n => fresh.functionRegistry.functionExists(id(n)))
+    assert(missingScalars.isEmpty, s"scalars missing: ${missingScalars.mkString(", ")}")
+    // the admin five stay registration-time-only
+    assert(!fresh.tableFunctionRegistry.functionExists(id("materialize_partitions")))
+  }
+
   test("doc: admin table-function five — is_admin gated, command semantics") {
     val root = java.nio.file.Files.createTempDirectory("graft_admin_tf").toString
     try {

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.JitPartitions
 import graft.operators.JitPartitions._
-import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 /** The event-time JIT grouping (reference #1429, jit_partitions.rs:65):

@@ -3,8 +3,7 @@ package graft
 import scala.collection.mutable
 
 import graft.operators.Perfetto
-import graft.operators.Perfetto.{NewInterned, PSpan}
-import graft.queries.ObservabilityExt6
+import graft.operators.Perfetto.PSpan
 
 /** Decodes the binary Perfetto chunks back into a packet stream and
   * checks them against the relational packet model

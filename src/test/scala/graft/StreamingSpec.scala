@@ -12,7 +12,7 @@ case class StreamDoc(ts: Timestamp, doc_id: Long, text: String)
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
-  private def t(minute: Int, sec: Int = 0): Timestamp =
+  private def t(minute: Int, sec: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:$sec%02d")
 
   test("streaming log_stats aggregates per-minute counts with watermark") {

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
 
 /** Semantic invariants for the round-3 tranche-4 operators (value
   * exactness is the oracle gate's job; these pin the semantics the

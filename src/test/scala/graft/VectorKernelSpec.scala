@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
 
 /** Contract tests for the native vector kernels `graft_dot` /
   * `graft_l2sq` (functions/VectorExpressions.scala): value parity with
